@@ -7,15 +7,19 @@ with ``source == "origin"``, re-tags them ``source = "transform"`` and
 writes them back to the same topic (test/test_getDuplex.coffee's loop).
 
 * Backfill phase: a pre-built backlog of ``BACKLOG`` records is on the
-  topic before the pipe starts; the per-partition trigger cap ``CAP`` is
-  large enough that per-record work dominates each trigger. Yields
-  ``rows_per_s`` (catch-up throughput, the pipe's ceiling) and the
-  deterministic backfill trigger count.
+  topic before the pipe starts, dealt evenly over the partitions, and the
+  per-partition trigger cap ``CAP`` splits it into ``BACKLOG / (CAP *
+  PARTITIONS)`` triggers that read only originals. The first is cold and
+  counts toward ``setup_s``; ``rows_per_s`` is the re-tagged originals of
+  the others over the time from the end of the first to the end of the
+  last. The triggers that follow only read the pipe's own copies back
+  and filter them out; they are drained before the live phase but not
+  timed.
 * Live phase: ``busgen.py`` runs in its own process at ``RATE`` events/s
   in ``TICK_MS`` ticks for ``--seconds``. An event's latency runs from
   its due time to the first ``TopicLog.end_offsets`` poll that shows its
   re-tagged copy; offsets come from reading the topic after the run.
-  Micro-batches are few and per-trigger cost dominates, so this phase
+  Micro-batches are small and per-trigger cost dominates, so this phase
   moves with fixed trigger cost and hides per-record cost.
 
 Checks (after the timed phases): every generated id appears exactly once
@@ -37,8 +41,8 @@ from measure import percentile
 
 TOPIC = "bus"
 PARTITIONS = 2
-BACKLOG = 262_144
-CAP = 65_536          # per partition per trigger: 131,072 rows a trigger
+BACKLOG = 524_288
+CAP = 65_536          # per partition per trigger: 4 triggers of originals
 RATE = 2_000          # events/s offered in the live phase
 TICK_MS = 50
 POLL_S = 0.025
@@ -60,7 +64,7 @@ def _gen(ctx, out: str, *args: str) -> subprocess.Popen:
     cmd = [sys.executable, os.path.join(ctx.bench_dir, "busgen.py"),
            "--root", ctx.log_root, "--topic", TOPIC, "--seed", str(ctx.seed),
            "--out", out, *args]
-    return subprocess.Popen(cmd, env=ctx.env)
+    return ctx.rss.spawn(cmd, env=ctx.env)
 
 
 def _wait_gen(proc: subprocess.Popen, out: str) -> dict:
@@ -72,6 +76,10 @@ def _wait_gen(proc: subprocess.Popen, out: str) -> dict:
 
 def _ts(progress: dict) -> float:
     return datetime.fromisoformat(progress["timestamp"].replace("Z", "+00:00")).timestamp()
+
+
+def _end(progress: dict) -> float:
+    return _ts(progress) + progress["durationMs"].get("triggerExecution", 0) / 1000.0
 
 
 def run(ctx) -> dict:
@@ -142,8 +150,6 @@ def run(ctx) -> dict:
 
     # --- backfill: originals + re-tagged copies = 2 x BACKLOG records ---
     t_drained = drain(2 * BACKLOG, "bus.backfill_drain")
-    first_rows = q.recentProgress[0]["numInputRows"]
-    rows_per_s = (BACKLOG - first_rows) / max(t_drained - t_first, 1e-9)
     ctx.report["backfill_drain_s"] = t_drained - t_first
 
     # --- live open-loop traffic for --seconds ---
@@ -152,7 +158,6 @@ def run(ctx) -> dict:
     with tr.span("bus.live", rate=RATE, seconds=ctx.seconds):
         gen = _gen(ctx, out, "--first-id", str(BACKLOG), "--rate", str(RATE),
                    "--tick-ms", str(TICK_MS), "--seconds", str(ctx.seconds))
-        ctx.rss.exclude.add(gen.pid)
         while gen.poll() is None:
             poll()
             time.sleep(POLL_S)
@@ -212,14 +217,20 @@ def run(ctx) -> dict:
 
     trig = [p for p in progress if p["numInputRows"] > 0]
     for p in progress:
-        t0 = _ts(p)
-        tr.add("streaming.duplex.trigger", t0,
-               t0 + p["durationMs"].get("triggerExecution", 0) / 1000.0,
+        tr.add("streaming.duplex.trigger", _ts(p), _end(p),
                batch=p["batchId"], rows=p["numInputRows"], durations_ms=p["durationMs"])
     live_trig = [p for p in trig if _ts(p) >= live["start"]]
     back_trig = [p for p in trig if _ts(p) < live["start"]]
-    warm_back = back_trig[1:]   # the first trigger is cold and in setup_s
-    warm_rows = sum(p["numInputRows"] for p in warm_back)
+    # the triggers that read the backlog's originals; the first is cold
+    # and in setup_s, the rest are timed end to end
+    n_orig = int(np.searchsorted(np.cumsum([p["numInputRows"] for p in back_trig]),
+                                 BACKLOG)) + 1
+    orig_trig = back_trig[:n_orig]
+    warm_orig = orig_trig[1:]
+    if not warm_orig:
+        raise RuntimeError("the backlog was read in a single trigger; nothing warm to time")
+    warm_rows = BACKLOG - orig_trig[0]["numInputRows"]
+    rows_per_s = warm_rows / (_end(orig_trig[-1]) - _end(orig_trig[0]))
 
     def dur(key, trs=live_trig):
         return [p["durationMs"].get(key, 0) for p in trs]
@@ -247,14 +258,14 @@ def run(ctx) -> dict:
         "bus.backlog_max_rows": float(bv.max()) if len(bv) else 0.0,
         "bus.backlog_slope_rows_per_s": slope,
         "backfill.trigger_count": float(len(back_trig)),
-        "backfill.addBatch_us_per_row": (
-            sum(dur("addBatch", warm_back)) * 1000.0 / warm_rows if warm_rows else 0.0),
+        "backfill.addBatch_us_per_row": sum(dur("addBatch", warm_orig)) * 1000.0 / warm_rows,
     }
     ctx.report.update({
         "latency_p90_ms": percentile(lat_ms, 90),
         "check_s": time.time() - t_check,
         "events": n_gen, "live_events": live["n"], "latency_samples": len(lat_ms),
         "live_micro_batches": len(live_trig), "backfill_rows": BACKLOG,
+        "backfill_timed_triggers": len(warm_orig),
         "backfill_cap_per_partition": CAP, "offered_rate": RATE,
     })
     return {

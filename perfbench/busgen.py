@@ -20,15 +20,16 @@ from __future__ import annotations
 
 import argparse
 import json
-import os
-import sys
 import time
 
 import numpy as np
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from datagen import zipf_keys  # noqa: E402
+def zipf_keys(rng: np.random.Generator, n: int, n_keys: int = 1000,
+              s: float = 1.1) -> np.ndarray:
+    """``n`` key ids in ``[0, n_keys)`` with Zipf(s) popularity."""
+    p = 1.0 / np.arange(1, n_keys + 1) ** s
+    return rng.choice(n_keys, size=n, p=p / p.sum())
 
 
 def _records(first_id: int, keys, due_ms: int) -> tuple[list[str], list[str]]:

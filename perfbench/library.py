@@ -1,39 +1,48 @@
 """The ``library`` workload: the curation funnel and graph-ANN serving,
-the two heaviest paths of the LLM-data library, on seeded tables.
+the two heaviest paths of the LLM-data library, on the fixed sf0.1
+``documents`` and ``embeddings`` tables copied into perfbench/data.
 
 * Curation: ``q310_corpus_pipeline`` (normalize, exact dedup, MinHash
   near-dedup, ExactSubstr excision, repetition filter, perplexity
-  terciles, temperature mixture) over ``N_DOCS`` seeded documents. The
-  first pass is cold and counts toward ``setup_s``; warm passes give
+  terciles, temperature mixture) over the first ``N_DOCS`` documents.
+  The first pass is cold and counts toward ``setup_s``; warm passes give
   ``rows_per_s`` (input documents per pass second).
-* ANN serving: ``build_nsw_corpus`` over ``N_VECS`` seeded vectors and
-  one warm-up request (both in ``setup_s``), then a closed loop with one
-  client. Each request is
-  ``beam_search_partitioned(...).collect()`` on the 16 vectors with
+* ANN serving: ``build_nsw_corpus`` over all 2,000 vectors and one
+  warm-up request (both in ``setup_s``), then a closed loop with one
+  client. Each request is ``beam_search_partitioned(...).collect()`` on
+  ``QUERIES`` vectors drawn by the seed from the 40 with
   ``vec_id % 50 = 0``, the ones q335's oracle answers;
   ``latency_p50_ms`` is the request wall time.
 
-The measured phase serves requests for its first half and runs warm
-curation passes for the rest, starting no new step once its share of
-``--seconds`` has passed. Neither path touches the transport.
+The measured phase serves requests for its first half, at least
+``MIN_REQUESTS`` of them, and runs warm curation passes for the rest, at
+least one, starting no new step once its share of ``--seconds`` has
+passed. Neither path touches the transport.
 
-Checks (after the timed phase, DuckDB): each pass's 8-row funnel equals
-q310's oracle; each request's answers equal q335's oracle rows for its
-queries (the partitioned walk is bit-identical to q335's, the q342 gate).
+Checks (after the timed phase): each pass's 8-row funnel equals q310's
+DuckDB oracle on the same documents; each request's answers equal q335's
+oracle rows for its queries (the partitioned walk is bit-identical to
+q335's, the q342 gate), stored in perfbench/data by ``expected.py``.
 """
 
 from __future__ import annotations
 
+import json
 import os
 import time
 
 import numpy as np
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 
-import datagen
+from expected import DATA, EXPECTED
 from measure import busy_s, job_stats, percentile
 
+# a warm pass over all 5,000 sf0.1 documents takes 17-18 s on 4 cores,
+# longer than a run can give it; the first 1,000 take 8-12 s
 N_DOCS = 1_000
-N_VECS = 800
+QUERIES = 16
+MIN_REQUESTS = 3
 # q335's graph and walk constants (queries/llm.py _NSW_* / _KM_*)
 ANN = dict(r=8, n_assign=2, n_cells=8, n_iters=3, n_buckets=8)
 WALK = dict(k=5, beam=16, hops=6, n_buckets=8)
@@ -90,9 +99,14 @@ def run(ctx) -> dict:
 
     t = time.perf_counter()
     data = os.path.join(ctx.work, "data")
+    os.makedirs(data)
+    docs = pq.read_table(os.path.join(DATA, "documents.parquet"))
+    pq.write_table(docs.filter(pc.less(docs["doc_id"], N_DOCS)),
+                   os.path.join(data, "documents.parquet"))
+    with open(EXPECTED) as f:
+        want_ann = {int(q): {tuple(a) for a in v} for q, v in json.load(f).items()}
+    pool = sorted(want_ann)
     rng = np.random.default_rng(ctx.seed)
-    datagen.write_documents(rng, data, N_DOCS)
-    datagen.write_embeddings(rng, data, N_VECS)
     ctx.excluded_s += time.perf_counter() - t
 
     spark = ctx.start_session(cores=ctx.nproc)
@@ -122,28 +136,30 @@ def run(ctx) -> dict:
     def curation_pass():
         return [tuple(r) for r in q310(spark, data).collect()]
 
-    emb = spark.read.parquet(os.path.join(data, "embeddings.parquet"))
-    pool = [r[0] for r in emb.where("vec_id % 50 = 0").select("vec_id").collect()]
+    emb = spark.read.parquet(os.path.join(DATA, "embeddings.parquet"))
     adj = os.path.join(ctx.work, "ann_index")
 
-    def request(ids):
+    def request():
+        ids = sorted(int(i) for i in rng.choice(pool, QUERIES, replace=False))
         qs = emb.where(F.col("vec_id").isin(ids))
-        return beam_search_partitioned(spark, adj, hub, None, qs, **WALK).collect()
+        return ids, beam_search_partitioned(spark, adj, hub, None, qs, **WALK).collect()
 
     cold_funnel, cold, _ = timed("queries.q310_cold", curation_pass)
     hub, build, _ = timed("llm.similarity.build_nsw_corpus",
                           lambda: build_nsw_corpus(emb, adj, **ANN))
-    warm_rows, _, _ = timed("llm.similarity.request_warmup", lambda: request(pool))
+    warm_req, _, _ = timed("llm.similarity.request_warmup", request)
     ctx.end_setup()
 
     funnels, passes, requests = [], [], []
     op_totals: dict[str, list[float]] = {}
     t_start = time.time()
     # requests for the first half of the measured phase, curation passes
-    # for the rest; each block runs at least once
-    while not requests or time.time() - t_start < ctx.seconds / 2:
-        rows, st, _ = timed("llm.similarity.request", lambda: request(pool))
-        requests.append((rows, st))
+    # for the rest. At least MIN_REQUESTS requests: the first after the
+    # warm-up can still run up to a fifth slower, and a median of three
+    # sets it aside.
+    while len(requests) < MIN_REQUESTS or time.time() - t_start < ctx.seconds / 2:
+        req, st, _ = timed("llm.similarity.request", request)
+        requests.append((req, st))
     while not passes or time.time() - t_start < ctx.seconds:
         funnel, st, (t0, t1) = timed("queries.q310", curation_pass)
         funnels.append(funnel)
@@ -159,26 +175,23 @@ def run(ctx) -> dict:
     peak_rss_mb = ctx.rss.stop()
     ctx.end_measure()
 
-    # --- checks against the DuckDB oracles ---
+    # --- checks against the q310 DuckDB oracle and q335's stored rows ---
     from rdkafka_streams_spark.testing import duck_con
 
-    con = duck_con(data, tables=("documents", "embeddings"))
+    con = duck_con(data, tables=("documents",))
     want_funnel = [tuple(r) for r in con.execute(
         REGISTRY["q310_corpus_pipeline"].oracle).fetchall()]
-    ann_rows = con.execute(REGISTRY["q335_beam_search_graph_ann"].oracle).fetchall()
     con.close()
-    want_ann: dict[int, set] = {}
-    for q_id, vec_id, dist in ann_rows:
-        want_ann.setdefault(int(q_id), set()).add((int(vec_id), int(dist)))
 
-    def ann_ok(rows) -> bool:
+    def ann_ok(req) -> bool:
+        ids, rows = req
         got: dict[int, set] = {}
         for r in rows:
             got.setdefault(int(r["q_id"]), set()).add((int(r["vec_id"]), int(r["dist_sq"])))
-        return got == {i: want_ann.get(i, set()) for i in pool}
+        return got == {i: want_ann[i] for i in ids}
 
     failed = sum(sorted(f) != sorted(want_funnel) for f in [cold_funnel, *funnels])
-    failed += sum(not ann_ok(rows) for rows in [warm_rows, *(r[0] for r in requests)])
+    failed += sum(not ann_ok(req) for req in [warm_req, *(r[0] for r in requests)])
     attempted = 1 + len(funnels) + 1 + len(requests)
 
     pass_s = [p["wall_s"] for p in passes]
@@ -208,7 +221,7 @@ def run(ctx) -> dict:
         per_layer[f"op.{fn_name}.s"] = secs / n
         per_layer[f"op.{fn_name}.jobs"] = jobs / n
     ctx.report.update({
-        "docs": N_DOCS, "vectors": N_VECS, "queries_per_request": len(pool),
+        "docs": N_DOCS, "queries_per_request": QUERIES, "query_pool": len(pool),
         "passes": len(passes), "requests": len(requests),
         "pass_s": pass_s, "request_s": req_s,
     })

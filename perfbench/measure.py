@@ -12,6 +12,7 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import subprocess
 import threading
 import time
 from contextlib import contextmanager
@@ -81,6 +82,19 @@ def _children(pid: int) -> list[int]:
         return []
 
 
+def descendants(pid: int, exclude: frozenset[int] | set[int] = frozenset()) -> list[int]:
+    """Every live descendant of ``pid``, leaving out the pids in
+    ``exclude`` and their own descendants."""
+    out, todo = [], _children(pid)
+    while todo:
+        p = todo.pop()
+        if p in exclude:
+            continue
+        out.append(p)
+        todo.extend(_children(p))
+    return out
+
+
 def _rss_kb(pid: int) -> int:
     try:
         with open(f"/proc/{pid}/status") as f:
@@ -95,25 +109,29 @@ def _rss_kb(pid: int) -> int:
 class RssSampler:
     """Peak summed RSS of this process and its descendants (the Spark JVM
     and its Python workers), sampled every ``interval`` seconds on a
-    thread. Pids in ``exclude`` and their descendants are left out, so
-    a load generator the run spawns does not count as system memory."""
+    thread. Processes started through ``spawn`` (load generators) and
+    their descendants are left out: they are not the system under test."""
 
     def __init__(self, interval: float = 0.2):
         self.interval = interval
-        self.exclude: set[int] = set()
         self.peak_kb = 0
+        self._exclude: set[int] = set()
+        self._lock = threading.Lock()
         self._stop = threading.Event()
         self._thread = threading.Thread(target=self._loop, daemon=True)
 
+    def spawn(self, cmd: list[str], **kw) -> subprocess.Popen:
+        """Start a process that is never sampled. The lock keeps a sample
+        from falling between the fork and the exclusion."""
+        with self._lock:
+            proc = subprocess.Popen(cmd, **kw)
+            self._exclude.add(proc.pid)
+        return proc
+
     def _sample(self) -> int:
-        total, todo = 0, [os.getpid()]
-        while todo:
-            pid = todo.pop()
-            if pid in self.exclude:
-                continue
-            total += _rss_kb(pid)
-            todo.extend(_children(pid))
-        return total
+        with self._lock:
+            me = os.getpid()
+            return sum(_rss_kb(p) for p in [me, *descendants(me, self._exclude)])
 
     def _loop(self) -> None:
         while not self._stop.is_set():

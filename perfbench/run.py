@@ -32,7 +32,7 @@ import traceback  # noqa: E402
 BENCH_DIR = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, BENCH_DIR)
 
-from measure import RssSampler, Tracer, box_probes  # noqa: E402
+from measure import RssSampler, Tracer, box_probes, descendants  # noqa: E402
 
 WORKLOADS = ("bus", "library")
 
@@ -105,23 +105,9 @@ class Context:
         self.measure_s = time.time() - self._t_setup_end
 
 
-def _descendants(pid: int) -> list[int]:
-    out, todo = [], [pid]
-    while todo:
-        p = todo.pop()
-        try:
-            with open(f"/proc/{p}/task/{p}/children") as f:
-                kids = [int(k) for k in f.read().split()]
-        except OSError:
-            kids = []
-        out.extend(kids)
-        todo.extend(kids)
-    return out
-
-
 def _stop_all(ctx: Context) -> None:
     """Stop Spark and wait for the JVM and every Python worker to exit."""
-    pids = _descendants(os.getpid())
+    pids = descendants(os.getpid())
     if ctx.spark is not None:
         from pyspark import SparkContext
 

@@ -5,7 +5,9 @@
 The slow tests run each workload twice with the same seed and require the
 deterministic counts (DAG witnesses that wall-clock noise cannot move) to
 repeat exactly, and every per-layer metric of BENCHMARK.json to be
-produced by some workload. They take a few minutes.
+produced by some workload, and recompute q335's oracle rows that the
+library workload's ANN check reads from perfbench/data. They take a few
+minutes.
 """
 
 from __future__ import annotations
@@ -14,12 +16,14 @@ import json
 import os
 import subprocess
 import sys
+import time
 
 import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from measure import busy_s, percentile  # noqa: E402
+import expected  # noqa: E402
+from measure import RssSampler, busy_s, percentile  # noqa: E402
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 COUNTS = {
@@ -38,6 +42,28 @@ def test_busy_s_merges_overlapping_jobs():
 def test_percentile_of_nothing_is_zero():
     assert percentile([], 50) == 0.0
     assert percentile([1.0, 3.0], 50) == 2.0
+
+
+def _peak_mb_with_child(spawn: bool) -> float:
+    # a child that holds 200 MB until the sampler has seen it
+    cmd = [sys.executable, "-c",
+           "import time; b = b'x' * (200 << 20); print(flush=True); time.sleep(1)"]
+    rss = RssSampler(interval=0.02).start()
+    start = rss.spawn if spawn else subprocess.Popen
+    with start(cmd, stdout=subprocess.PIPE) as child:
+        child.stdout.readline()
+        time.sleep(0.2)
+        peak = rss.stop()
+    return peak
+
+
+def test_spawned_processes_are_not_sampled():
+    assert _peak_mb_with_child(spawn=False) - _peak_mb_with_child(spawn=True) > 150
+
+
+def test_stored_ann_answers_equal_the_oracle():
+    with open(expected.EXPECTED) as f:
+        assert json.load(f) == expected.oracle_answers()
 
 
 def _run(workload: str, seed: int = 7) -> dict:

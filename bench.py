@@ -218,7 +218,8 @@ def _multirow_scan_probe(spark, sf_dir: str, runs: int = 3) -> dict:
     try:
         (
             spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet"))
-            .select("l_orderkey", "l_partkey", "l_suppkey", "l_comment")
+            .selectExpr("l_orderkey", "l_partkey", "l_suppkey",
+                        "cast(l_shipdate as string) as l_shipdate")
             .repartition(64)
             .write.mode("overwrite")
             .parquet(d)
@@ -226,7 +227,7 @@ def _multirow_scan_probe(spark, sf_dir: str, runs: int = 3) -> dict:
         probe = spark.read.parquet(d).selectExpr(
             "md5(concat_ws(',', cast(l_orderkey as string),"
             " cast(l_partkey as string), cast(l_suppkey as string),"
-            " l_comment)) as h"
+            " cast(l_shipdate as string))) as h"
         )
         for _ in range(5):
             probe = probe.selectExpr("md5(h) as h")

@@ -57,7 +57,7 @@ from dataclasses import dataclass
 from datetime import datetime, timedelta, timezone
 from typing import Iterator, Sequence
 
-from pyspark.sql import DataFrame, Row, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceArrowWriter,
@@ -70,13 +70,6 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 from pyspark.sql.types import StructType
-
-try:  # Arrow produce path needs pyarrow importable driver-side too
-    import pyarrow  # noqa: F401
-
-    _HAS_ARROW = True
-except ImportError:  # pragma: no cover - container always ships pyarrow
-    _HAS_ARROW = False
 
 FORMAT_NAME = "topiclog"
 
@@ -538,6 +531,35 @@ def _chunk_lines(lines: list[str], seg_bytes: int | None) -> Iterator[list[str]]
         yield chunk
 
 
+def _publish_lines(root: str, topic: str, parts, cfg: dict,
+                   codec: str | None = None,
+                   client_id: str | None = None) -> None:
+    """The one produce publish step: each ``(pid, lines)`` of ``parts``
+    becomes segments, rolled at the topic's ``segment.bytes``
+    (_chunk_lines). ``codec`` is the producer's normalized codec and wins
+    when given; else the topic's ``compression.type`` applies (Kafka's
+    'producer' default: the topic honors the sender's codec). ``cfg`` is
+    the caller's ``_topic_config`` read. ``parts`` is consumed lazily, so
+    a generator can hand over one staged file at a time. With
+    ``client_id``, the UNCOMPRESSED wire bytes (encoded bytes + newline,
+    what the broker meters) are charged to its KIP-13 produce quota and
+    the caller backs off like a throttled client; an empty publish is not
+    metered."""
+    codec = codec or _norm_compression(cfg.get("compression.type"))
+    sb = cfg.get("segment.bytes")
+    seg_bytes = int(sb) if sb is not None else None
+    wire = 0
+    for pid, lines in parts:
+        wire += sum(len(ln.encode("utf-8")) + 1 for ln in lines)
+        for chunk in _chunk_lines(lines, seg_bytes):
+            _publish_segment(_part_dir(root, topic, pid), chunk,
+                             compression=codec)
+    if client_id is not None and wire:
+        tms = TopicLog(root).record_quota_usage(client_id, "produce", wire)
+        if tms:
+            time.sleep(tms / 1000.0)
+
+
 def _read_range(
     root: str, topic: str, pid: int, start: int, end: int,
     include_headers: bool = False,
@@ -683,8 +705,8 @@ def _read_range_arrow(
     """Yield Arrow RecordBatches for offsets [start, end) of one partition.
 
     Per segment: one C++ JSONL parse + columnar casts (see _seg_table);
-    per-row Python survives only for legacy base64 segments. Falls back to
-    the tuple iterator if pyarrow is unavailable in the worker."""
+    per-row Python survives only for legacy base64 segments. Every read
+    but a headers read takes this path (see _read_best)."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
@@ -3012,24 +3034,9 @@ class TopicLog:
             # a crash in between leaves an open txn whose records stay
             # invisible to read_committed (Kafka's pending-txn posture)
             self._txn_touch(txn, topic, sorted(by_pid))
-        # producer codec wins when given (Kafka: topic compression.type
-        # defaults to 'producer' = honor the sender), else the topic config
-        codec = (_norm_compression(compression, "compression")
-                 or _norm_compression(cfg.get("compression.type")))
-        sb = cfg.get("segment.bytes")
-        seg_bytes = int(sb) if sb is not None else None
-        for pid, lines in by_pid.items():
-            for chunk in _chunk_lines(lines, seg_bytes):
-                _publish_segment(_part_dir(self.root, topic, pid), chunk,
-                                 compression=codec)
-        if client_id is not None:  # KIP-13 produce quota: account the
-            # UNCOMPRESSED request bytes (what the broker meters — encoded
-            # bytes, not characters) and back off like a throttled client
-            wire = sum(len(ln.encode("utf-8")) + 1
-                       for lines in by_pid.values() for ln in lines)
-            tms = self.record_quota_usage(client_id, "produce", wire)
-            if tms:
-                time.sleep(tms / 1000.0)
+        _publish_lines(self.root, topic, by_pid.items(), cfg,
+                       _norm_compression(compression, "compression"),
+                       client_id)
 
     def append_json(self, topic: str, objs: Sequence[dict], **kw) -> None:
         """JSON.stringify-and-produce, the reference's record shape."""
@@ -3233,10 +3240,9 @@ def _route(key: bytes | None, value: bytes, n: int) -> int:
 
 
 def _read_best(partition: "_Part"):
-    """Arrow-batched read when pyarrow is importable in the worker (the
-    generator defers the import, so probe eagerly), else row tuples. A
-    ``None`` partition is the engine's empty-scan probe (partitions()
-    returned []) — yield nothing. A headers read always takes the row path: the envelope's
+    """Arrow-batched read of one scan partition. A ``None`` partition is
+    the engine's empty-scan probe (partitions() returned []) — yield
+    nothing. A headers read takes the row path: the envelope's
     list<struct<string,binary>> column with per-record null/ordering
     semantics has no zero-copy JSONL parse, and headers topics opt in
     explicitly (Kafka's includeHeaders default is false for the same
@@ -3250,18 +3256,10 @@ def _read_best(partition: "_Part"):
             partition.start, partition.end, include_headers=True,
             excluded_txns=excl,
         )
-    try:
-        import pyarrow  # noqa: F401
-
-        return _read_range_arrow(
-            partition.root, partition.topic, partition.pid,
-            partition.start, partition.end, excluded_txns=excl,
-        )
-    except ImportError:
-        return _read_range(
-            partition.root, partition.topic, partition.pid,
-            partition.start, partition.end, excluded_txns=excl,
-        )
+    return _read_range_arrow(
+        partition.root, partition.topic, partition.pid,
+        partition.start, partition.end, excluded_txns=excl,
+    )
 
 
 # ------------------------------------------------------------- the datasource
@@ -3654,51 +3652,6 @@ def _sink_txn_tag() -> str:
     return f"__sink-{qid}-{bid}"
 
 
-def _stage_rows(
-    rows: Iterator[Row], root: str, topic: str, fields: list[str],
-    tombstones: bool = False, txn_tag: str | None = None,
-) -> _Staged:
-    """Executor side: bucket rows by partition, write one staged file per
-    bucket. Nothing becomes visible until driver-side commit links it in."""
-    n_parts = len(_list_partitions(root, topic)) or 1
-    has_key, has_part = "key" in fields, "partition" in fields
-    has_ts = "timestamp" in fields
-    has_hdr = "headers" in fields
-    ts = int(time.time() * 1000)
-    by_pid: dict[int, list[str]] = {}
-    for row in rows:
-        v = row["value"]
-        rts = _to_epoch_ms(row["timestamp"], ts) if has_ts else ts
-        hdr = None
-        if has_hdr and row["headers"] is not None:
-            hdr = _headers_to_wire([(h["key"], h["value"]) for h in row["headers"]])
-        kb = None
-        if has_key and row["key"] is not None:
-            k = row["key"]
-            kb = k.encode() if isinstance(k, str) else bytes(k)
-        if v is None:
-            # Kafka null-value tombstone: only meaningful on a compacted,
-            # keyed topic — reject unless the sink opted in AND the record
-            # carries a key to tombstone.
-            if not tombstones:
-                raise ValueError(
-                    "topiclog sink: null 'value' requires option tombstones=true"
-                )
-            if kb is None:
-                raise ValueError("topiclog sink: tombstone requires a key")
-            vb = None
-        else:
-            vb = v.encode() if isinstance(v, str) else bytes(v)
-        if has_part and row["partition"] is not None:
-            pid = int(row["partition"]) % n_parts
-        else:
-            pid = _route(kb, vb, n_parts)
-        by_pid.setdefault(pid, []).append(
-            _encode_line(kb, vb, rts, headers=hdr, txn=txn_tag)
-        )
-    return _write_staged(root, topic, by_pid, txn=txn_tag)
-
-
 def _to_epoch_ms(v, default_ms: int) -> int:
     """Producer-supplied record timestamp → epoch millis (the Kafka sink's
     optional ``timestamp`` column: CreateTime semantics). Accepts datetime
@@ -3737,11 +3690,14 @@ def _stage_batches(
     batches, root: str, topic: str, fields: list[str], tombstones: bool = False,
     txn_tag: str | None = None,
 ) -> _Staged:
-    """Arrow-batched staging (the produce-path twin of _read_range_arrow):
-    columns come out of the RecordBatch as plain Python lists in one call,
-    skipping the engine's per-row pickle → Row materialization (measured
-    ~3× on the produce path at 100k records). Line encode/base64 is per
-    record by format, but runs over local bindings only."""
+    """Executor side: bucket records by partition, write one staged file per
+    bucket; nothing becomes visible until driver-side commit links it in.
+    The sink takes Arrow batches (the produce-path twin of
+    _read_range_arrow) because columns come out of a RecordBatch as plain
+    Python lists in one call, skipping the engine's per-row pickle → Row
+    materialization (measured ~3× the Row-iterator rate at 100k records).
+    Line encode/base64 is per record by format, but runs over local
+    bindings only."""
     n_parts = len(_list_partitions(root, topic)) or 1
     has_key, has_part = "key" in fields, "partition" in fields
     has_ts = "timestamp" in fields
@@ -3792,34 +3748,24 @@ def _commit_staged(messages, root: str, topic: str,
                    client_id: str | None = None) -> None:
     """Driver side: publish every staged file as a segment (serialized here,
     so offset assignment needs no cross-task coordination), then drop the
-    staging files. ``compression`` is the sink's ``compression.type``
-    option; unset falls back to the topic config (Kafka's 'producer'
-    default: the topic honors the sender's codec). ``client_id`` meters
-    the publish against the entity's KIP-13 produce quota and backs off
-    like a throttled client — at the commit boundary, the sink-side
-    analog of a broker delaying the produce response."""
-    cfg = _topic_config(root, topic)
-    codec = (_norm_compression(compression)
-             or _norm_compression(cfg.get("compression.type")))
-    sb = cfg.get("segment.bytes")
-    seg_bytes = int(sb) if sb is not None else None
-    wire = 0
-    for m in messages:
-        if m is None:
-            continue
-        for pid, path in m.files:
-            with open(path, encoding="utf-8") as f:
-                lines = [ln.rstrip("\n") for ln in f if ln.strip()]
-            if lines:
-                wire += sum(len(ln.encode("utf-8")) + 1 for ln in lines)
-                for chunk in _chunk_lines(lines, seg_bytes):
-                    _publish_segment(_part_dir(root, topic, pid), chunk,
-                                     compression=codec)
-            os.unlink(path)
-    if client_id is not None and wire:
-        tms = TopicLog(root).record_quota_usage(client_id, "produce", wire)
-        if tms:
-            time.sleep(tms / 1000.0)
+    staging files. ``compression`` is the sink's normalized
+    ``compression.type`` option and ``client_id`` its produce-quota
+    entity — both applied by _publish_lines, the commit boundary being
+    the sink-side analog of a broker delaying the produce response."""
+
+    def staged():  # one file in memory at a time; unlinked once published
+        for m in messages:
+            if m is None:
+                continue
+            for pid, path in m.files:
+                with open(path, encoding="utf-8") as f:
+                    lines = [ln.rstrip("\n") for ln in f if ln.strip()]
+                if lines:
+                    yield pid, lines
+                os.unlink(path)
+
+    _publish_lines(root, topic, staged(), _topic_config(root, topic),
+                   compression, client_id)
 
 
 def _commit_staged_txn(
@@ -3956,39 +3902,12 @@ def _abort_staged(messages) -> None:
                 pass
 
 
-class _TopicLogBatchWriter(DataSourceWriter):
-    def __init__(self, options: dict, schema: StructType):
-        self.root = options.get("path") or options.get("root")
-        self.topic = options["topic"]
-        _authorize_ds(options, "WRITE", self.topic)
-        self.fields = [f.name for f in schema.fields]
-        self.tombstones = str(options.get("tombstones", "false")).lower() == "true"
-        self.compression = _norm_compression(options.get("compression.type"))
-        self.client_id = options.get("client.id")
-        if str(options.get("atomic", "false")).lower() == "true" \
-                or options.get("txnid"):
-            # streaming-only options: a one-shot batch write has no
-            # micro-batch replay to dedup and no batch-scoped txn tag —
-            # reject rather than silently publishing without the guarantee
-            raise ValueError(
-                "topiclog batch sink: atomic/txnId are streaming-only; "
-                "use the streaming writer for exactly-once publish"
-            )
-        if "value" not in self.fields:
-            raise ValueError("topiclog sink requires a 'value' column (kafka sink contract)")
+class _TopicLogSink:
+    """Option parsing and validation shared by the batch and streaming
+    sinks (Kafka sink contract: a ``value`` column, optional ``key`` /
+    ``partition`` / ``timestamp`` / ``headers``). ``_check_options`` holds
+    the checks that differ per sink and runs before the ``value`` check."""
 
-    def write(self, iterator: Iterator[Row]) -> WriterCommitMessage:
-        return _stage_rows(iterator, self.root, self.topic, self.fields, self.tombstones)
-
-    def commit(self, messages) -> None:
-        _commit_staged(messages, self.root, self.topic, self.compression,
-                       self.client_id)
-
-    def abort(self, messages) -> None:
-        _abort_staged(messages)
-
-
-class _TopicLogStreamWriter(DataSourceStreamWriter):
     def __init__(self, options: dict, schema: StructType):
         self.root = options.get("path") or options.get("root")
         self.topic = options["topic"]
@@ -3999,58 +3918,27 @@ class _TopicLogStreamWriter(DataSourceStreamWriter):
         self.client_id = options.get("client.id")
         self.txn_id = options.get("txnid")
         self.atomic = str(options.get("atomic", "false")).lower() == "true"
-        if self.atomic and (self.compression or self.client_id):
-            # the atomic sink hard-links staged files into place (WAL +
-            # inode protocol), so it can neither recompress nor meter at
-            # commit — reject rather than silently dropping the options
-            raise ValueError(
-                "topiclog sink: atomic=true is incompatible with "
-                "compression.type/client.id (the atomic WAL links staged "
-                "files; publish plain and set the codec as a topic config "
-                "for non-atomic producers, or drop atomic)"
-            )
+        self._check_options()
         if "value" not in self.fields:
             raise ValueError("topiclog sink requires a 'value' column (kafka sink contract)")
 
-    def write(self, iterator: Iterator[Row]) -> WriterCommitMessage:
-        return _stage_rows(iterator, self.root, self.topic, self.fields,
-                           self.tombstones,
-                           txn_tag=_sink_txn_tag() if self.atomic else None)
-
-    def commit(self, messages, batchId: int) -> None:
-        if self.atomic:
-            # atomic mode hard-links staged files into place (the WAL/inode
-            # protocol), so it always publishes plain segments: recompression
-            # would break link-from-stage. compression.type is ignored here.
-            _commit_staged_atomic(messages, self.root, self.topic)
-        else:
-            _commit_staged_txn(messages, self.root, self.topic, self.txn_id,
-                               batchId, self.compression, self.client_id)
-
-    def abort(self, messages, batchId: int) -> None:
-        _abort_staged(messages)
+    def _check_options(self) -> None:
+        raise NotImplementedError
 
 
-class _TopicLogArrowWriter(DataSourceArrowWriter):
-    """Arrow-batch produce path (preferred when pyarrow exists in the
-    worker — same staging/commit protocol, ~3× the Row-iterator rate)."""
+class _TopicLogArrowWriter(_TopicLogSink, DataSourceArrowWriter):
+    """Batch sink: stages Arrow batches per task (_stage_batches), publishes
+    them at commit (_commit_staged)."""
 
-    def __init__(self, options: dict, schema: StructType):
-        self.root = options.get("path") or options.get("root")
-        self.topic = options["topic"]
-        _authorize_ds(options, "WRITE", self.topic)
-        self.fields = [f.name for f in schema.fields]
-        self.tombstones = str(options.get("tombstones", "false")).lower() == "true"
-        self.compression = _norm_compression(options.get("compression.type"))
-        self.client_id = options.get("client.id")
-        if str(options.get("atomic", "false")).lower() == "true" \
-                or options.get("txnid"):
+    def _check_options(self) -> None:
+        if self.atomic or self.txn_id:
+            # streaming-only options: a one-shot batch write has no
+            # micro-batch replay to dedup and no batch-scoped txn tag —
+            # reject rather than silently publishing without the guarantee
             raise ValueError(
                 "topiclog batch sink: atomic/txnId are streaming-only; "
                 "use the streaming writer for exactly-once publish"
             )
-        if "value" not in self.fields:
-            raise ValueError("topiclog sink requires a 'value' column (kafka sink contract)")
 
     def write(self, iterator) -> WriterCommitMessage:
         return _stage_batches(iterator, self.root, self.topic, self.fields, self.tombstones)
@@ -4063,17 +3951,11 @@ class _TopicLogArrowWriter(DataSourceArrowWriter):
         _abort_staged(messages)
 
 
-class _TopicLogStreamArrowWriter(DataSourceStreamArrowWriter):
-    def __init__(self, options: dict, schema: StructType):
-        self.root = options.get("path") or options.get("root")
-        self.topic = options["topic"]
-        _authorize_ds(options, "WRITE", self.topic)
-        self.fields = [f.name for f in schema.fields]
-        self.tombstones = str(options.get("tombstones", "false")).lower() == "true"
-        self.compression = _norm_compression(options.get("compression.type"))
-        self.client_id = options.get("client.id")
-        self.txn_id = options.get("txnid")
-        self.atomic = str(options.get("atomic", "false")).lower() == "true"
+class _TopicLogStreamArrowWriter(_TopicLogSink, DataSourceStreamArrowWriter):
+    """Streaming sink: the batch sink's staging plus per-micro-batch txnId
+    dedup or the atomic (read_committed exactly-once) publish."""
+
+    def _check_options(self) -> None:
         if self.atomic and (self.compression or self.client_id):
             # the atomic sink hard-links staged files into place (WAL +
             # inode protocol), so it can neither recompress nor meter at
@@ -4084,8 +3966,6 @@ class _TopicLogStreamArrowWriter(DataSourceStreamArrowWriter):
                 "files; publish plain and set the codec as a topic config "
                 "for non-atomic producers, or drop atomic)"
             )
-        if "value" not in self.fields:
-            raise ValueError("topiclog sink requires a 'value' column (kafka sink contract)")
 
     def write(self, iterator) -> WriterCommitMessage:
         return _stage_batches(iterator, self.root, self.topic, self.fields,
@@ -4127,16 +4007,12 @@ class TopicLogDataSource(DataSource):
         return _TopicLogStreamReader({k.lower(): v for k, v in self.options.items()})
 
     def writer(self, schema: StructType, overwrite: bool) -> DataSourceWriter:
-        opts = {k.lower(): v for k, v in self.options.items()}
-        if _HAS_ARROW:
-            return _TopicLogArrowWriter(opts, schema)
-        return _TopicLogBatchWriter(opts, schema)
+        return _TopicLogArrowWriter(
+            {k.lower(): v for k, v in self.options.items()}, schema)
 
     def streamWriter(self, schema: StructType, overwrite: bool) -> DataSourceStreamWriter:
-        opts = {k.lower(): v for k, v in self.options.items()}
-        if _HAS_ARROW:
-            return _TopicLogStreamArrowWriter(opts, schema)
-        return _TopicLogStreamWriter(opts, schema)
+        return _TopicLogStreamArrowWriter(
+            {k.lower(): v for k, v in self.options.items()}, schema)
 
 
 _REGISTERED: set[str] = set()

@@ -487,17 +487,23 @@ def test_stream_writer_commit_abort_protocol(root):
     on commit; abort leaves the log untouched; a replayed (re-written) batch
     appends after the committed one (at-least-once, like the reference's
     cb-on-enqueue)."""
-    from pyspark.sql import Row
+    import pyarrow as pa
     from pyspark.sql.types import StringType, StructField, StructType
 
-    from rdkafka_streams_spark.streaming.topiclog import TopicLog, _TopicLogStreamWriter
+    from rdkafka_streams_spark.streaming.topiclog import (
+        TopicLog,
+        _TopicLogStreamArrowWriter,
+    )
 
     TopicLog(root).create_topic("proto", partitions=1)
     schema = StructType([StructField("value", StringType())])
-    w = _TopicLogStreamWriter({"path": root, "topic": "proto"}, schema)
+    w = _TopicLogStreamArrowWriter({"path": root, "topic": "proto"}, schema)
+
+    def batches():
+        return iter([pa.RecordBatch.from_pylist([{"value": "a"}, {"value": "b"}])])
 
     # abort path: stage then abort → nothing visible, staging cleaned
-    msg = w.write(iter([Row(value="a"), Row(value="b")]))
+    msg = w.write(batches())
     assert all(os.path.exists(p) for _pid, p in msg.files)
     assert TopicLog(root).end_offsets("proto") == {0: 0}
     w.abort([msg], batchId=0)
@@ -505,15 +511,59 @@ def test_stream_writer_commit_abort_protocol(root):
     assert TopicLog(root).end_offsets("proto") == {0: 0}
 
     # commit path: stage then commit → segment visible, staging cleaned
-    msg1 = w.write(iter([Row(value="a"), Row(value="b")]))
+    msg1 = w.write(batches())
     w.commit([msg1], batchId=0)
     assert TopicLog(root).end_offsets("proto") == {0: 2}
     assert not any(os.path.exists(p) for _pid, p in msg1.files)
 
     # replay of the same batch appends (at-least-once, never lost)
-    msg2 = w.write(iter([Row(value="a"), Row(value="b")]))
+    msg2 = w.write(batches())
     w.commit([msg2], batchId=0)
     assert TopicLog(root).end_offsets("proto") == {0: 4}
+
+
+def test_sink_option_checks_and_arrow_selection(root):
+    """Engine-free sink contract: both sinks reject a frame without a
+    ``value`` column, the batch sink rejects ``txnId`` (streaming-only), a
+    null-value tombstone needs a key, and the datasource hands the engine
+    Arrow writers only — there is no Row-iterator produce path."""
+    import pyarrow as pa
+    from pyspark.sql.datasource import (
+        DataSourceArrowWriter,
+        DataSourceStreamArrowWriter,
+    )
+    from pyspark.sql.types import StringType, StructField, StructType
+
+    from rdkafka_streams_spark.streaming.topiclog import (
+        TopicLogDataSource,
+        _TopicLogArrowWriter,
+        _TopicLogStreamArrowWriter,
+    )
+
+    TopicLog(root).create_topic("sink", partitions=1)
+    opts = {"path": root, "topic": "sink"}
+    no_value = StructType([StructField("key", StringType())])
+    kv = StructType([StructField("key", StringType()),
+                     StructField("value", StringType())])
+    for cls in (_TopicLogArrowWriter, _TopicLogStreamArrowWriter):
+        with pytest.raises(ValueError, match="requires a 'value' column"):
+            cls(opts, no_value)
+
+    with pytest.raises(ValueError, match="atomic/txnId are streaming-only"):
+        _TopicLogArrowWriter({**opts, "txnid": "p"}, kv)
+
+    w = _TopicLogArrowWriter({**opts, "tombstones": "true"}, kv)
+    orphan = pa.RecordBatch.from_pylist(
+        [{"key": None, "value": None}],
+        schema=pa.schema([("key", pa.string()), ("value", pa.string())]),
+    )
+    with pytest.raises(ValueError, match="tombstone requires a key"):
+        w.write(iter([orphan]))
+    assert TopicLog(root).end_offsets("sink") == {0: 0}
+
+    ds = TopicLogDataSource(opts)
+    assert isinstance(ds.writer(kv, False), DataSourceArrowWriter)
+    assert isinstance(ds.streamWriter(kv, False), DataSourceStreamArrowWriter)
 
 
 def test_concurrent_appends_offsets_dense(root):
@@ -786,11 +836,12 @@ def test_txn_sink_dedups_replayed_batch(spark, root):
     with an already-seen (txnId, batchId) must discard its staged files
     instead of appending duplicates; a different txnId sharing the topic
     must NOT dedup against it (markers are per-producer)."""
+    import pyarrow as pa
     from pyspark.sql.types import StructType
 
     from rdkafka_streams_spark.streaming.topiclog import (
         TopicLog,
-        _TopicLogStreamWriter,
+        _TopicLogStreamArrowWriter,
         read_topic,
     )
 
@@ -798,12 +849,11 @@ def test_txn_sink_dedups_replayed_batch(spark, root):
     log.create_topic("tx", partitions=2)
     schema = StructType.fromDDL("key string, value string")
     opts = {"path": root, "topic": "tx", "txnid": "prod-A"}
-    w = _TopicLogStreamWriter(opts, schema)
+    w = _TopicLogStreamArrowWriter(opts, schema)
 
     def stage(rows):
-        from pyspark.sql import Row
-
-        return w.write(iter([Row(key=k, value=v) for k, v in rows]))
+        return w.write(iter([pa.RecordBatch.from_pylist(
+            [{"key": k, "value": v} for k, v in rows])]))
 
     # epoch 0 commits once...
     w.commit([stage([("k0", "a"), ("k1", "b")])], 0)
@@ -815,7 +865,7 @@ def test_txn_sink_dedups_replayed_batch(spark, root):
     w.commit([stage([("k2", "c")])], 1)
     assert sum(log.end_offsets("tx").values()) == 3
     # a DIFFERENT producer id re-using batchId 0 is not deduped
-    w2 = _TopicLogStreamWriter({**opts, "txnid": "prod-B"}, schema)
+    w2 = _TopicLogStreamArrowWriter({**opts, "txnid": "prod-B"}, schema)
     w2.commit([stage([("k3", "d")])], 0)
     assert sum(log.end_offsets("tx").values()) == 4
     # no staged leftovers, and the data reads back exactly once

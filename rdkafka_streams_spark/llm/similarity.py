@@ -2431,6 +2431,63 @@ def build_nsw_corpus(
     return int(hub)
 
 
+def _long_matrix(col, what: str, dim: int | None = None):
+    """An Arrow ``list<bigint>`` column as an (n, dim) int64 matrix.
+    A NULL, ragged or NULL-holding vector raises ValueError: Spark's
+    ``_int_l2`` would give it a NULL distance, which no beam ranks."""
+    import numpy as np
+    import pyarrow.compute as pc
+
+    lens = pc.list_value_length(col)
+    flat = pc.list_flatten(col)
+    if dim is None:
+        dim = lens[0].as_py() if len(col) and lens[0].is_valid else 0
+    if col.null_count or flat.null_count or pc.any(
+        pc.not_equal(lens, dim)
+    ).as_py():
+        raise ValueError(f"{what} vectors must all be {dim} non-NULL longs")
+    return np.asarray(flat, dtype=np.int64).reshape(len(col), dim)
+
+
+def _check_l2_range(a, b) -> None:
+    """Raise ArithmeticError when an integer L2 between a row of ``a``
+    and a row of ``b`` could leave int64: numpy, like non-ANSI Spark,
+    would wrap it silently."""
+    if not a.size or not b.size:
+        return
+    m = max(int(a.max()), -int(a.min())) + max(int(b.max()), -int(b.min()))
+    if a.shape[1] * m * m > 2**63 - 1:
+        raise ArithmeticError(
+            f"squared distance may overflow int64 ({a.shape[1]} dims, "
+            f"|component| <= {m})"
+        )
+
+
+def _group_rank(q):
+    """Position of each row within its run of equal keys in the sorted
+    key array ``q``."""
+    import numpy as np
+
+    return np.arange(len(q)) - np.searchsorted(q, q, "left")
+
+
+def _top_beam(q, node, dist, width: int):
+    """Per query index ``q``: the ``width`` best distinct nodes in the
+    total (dist, node) order, returned sorted by (q, dist, node). A node
+    reached twice keeps its first copy (dist is a pure function of
+    (query, node), so the copies agree)."""
+    import numpy as np
+
+    o = np.lexsort((node, dist, q))
+    q, node, dist = q[o], node[o], dist[o]
+    _, first = np.unique(np.stack([q, node], axis=1), axis=0,
+                         return_index=True)
+    keep = np.sort(first)
+    q, node, dist = q[keep], node[keep], dist[keep]
+    keep = _group_rank(q) < width
+    return q[keep], node[keep], dist[keep]
+
+
 def beam_search_partitioned(
     spark,
     corpus_path: str,
@@ -2456,22 +2513,66 @@ def beam_search_partitioned(
     touching b of n_buckets buckets, a hop reads b/n_buckets of the
     index from disk.
 
+    ONE SPARK JOB PER HOP: the walk already holds the frontier on the
+    driver, so it holds the frontier's adjacency rows too. Each hop's
+    only job is the pruned scan, collected as Arrow; the driver scores
+    the candidates (integer L2 in numpy int64, the ``_int_l2`` value
+    bit-for-bit) and keeps each query's top ``beam`` distinct nodes in
+    the total (dist, node) order. A call runs at most hops + 3 jobs:
+    the query read, the index open (parquet schema inference), the
+    ``hub_vec=None`` lookup and one scan per hop. Driver memory per hop
+    is bounded by nq·beam·out-degree: the scan returns at most that
+    many adjacency rows of (dim + 2) longs, and scoring holds one
+    dim-long difference row per (query, candidate) pair. A request of
+    16 queries at beam 16 over 2,000 64-dim vectors scans at most
+    about 1,950 rows (1 MB) a hop. For large query batches use
+    ``beam_search_integer``, the lazy one-plan walk that keeps the beam
+    on the executors.
+
+    Queries are keyed by id: duplicate id rows collapse to one (they
+    must carry the same vector), NULL ids answer nothing, and a NULL or
+    wrong-length vector raises ValueError. ArithmeticError is raised
+    when a squared distance could overflow int64. Returns (q_id,
+    <id_col>, dist_sq), all bigint, as a local DataFrame.
+
     ``hub_vec`` is the hub's quantized vector (dim longs — artifact
-    metadata); pass None to read it from the hub's self-loop-free
-    out-edges' bucket (one pruned lookup). Each hop materializes the
-    (tiny) beam to the driver to build the next literal filter — the
-    q331 collect-the-probes posture, bounded by nq×beam ints."""
-    qs = queries.select(
-        F.col(id_col).alias("q_id"),
-        quantize_global(vec_col, scale).alias("__q_qv"),
-    ).localCheckpoint()
+    metadata); pass None to read it from the index, where it rides as
+    ``dv`` on the hub's in-edges (bridges guarantee at least one). That
+    lookup filters ``dst == hub``, which no partition prunes: it scans
+    every bucket."""
+    import numpy as np
+    import pyarrow as pa
+
+    def result(q, node, dist) -> DataFrame:
+        # an Arrow table under spark.sql.execution.arrow.localRelationThreshold
+        # becomes a LocalRelation: the caller's action starts no job
+        return spark.createDataFrame(pa.table(
+            [pa.array(c, pa.int64()) for c in (q, node, dist)],
+            names=["q_id", id_col, "dist_sq"],
+        ))
+
+    qt = (
+        queries.select(
+            F.col(id_col).cast("long").alias("q_id"),
+            quantize_global(vec_col, scale).alias("qv"),
+        )
+        .where(F.col("q_id").isNotNull())
+        .toArrow()
+    )
+    qmat = _long_matrix(qt["qv"], "query")
+    qids, first, inv = np.unique(
+        np.asarray(qt["q_id"], dtype=np.int64),
+        return_index=True, return_inverse=True,
+    )
+    if (qmat != qmat[first][inv]).any():
+        raise ValueError("a query id carries two different vectors")
+    qmat = qmat[first]
+    if not len(qids):
+        return result([], [], [])
+    index = spark.read.parquet(corpus_path)
     if hub_vec is None:
-        # the hub's own vector rides as the dst side of its in-edges
-        # (bridges guarantee at least one) — one index lookup, no
-        # corpus rescan
         row = (
-            spark.read.parquet(corpus_path)
-            .where(F.col("dst") == hub)
+            index.where(F.col("dst") == hub)
             .select("dv").limit(1).first()
         )
         if row is None:
@@ -2479,46 +2580,48 @@ def beam_search_partitioned(
                 f"hub {hub} has no in-edges — pass hub_vec explicitly"
             )
         hub_vec = list(row[0])
-    hv = F.array(*[F.lit(int(v)).cast("long") for v in hub_vec])
-    bm = qs.select(
-        "q_id", "__q_qv",
-        F.lit(int(hub)).cast("bigint").alias("node"),
-        _int_l2("__q_qv", hv).alias("dist"),
-    )
-    bw = Window.partitionBy("q_id").orderBy("dist", "node")
+    hv = np.asarray([hub_vec], dtype=np.int64)
+    if hv.shape[1] != qmat.shape[1]:
+        raise ValueError("hub_vec and query vectors differ in length")
+    _check_l2_range(qmat, hv)
+    # the beam: (query index, node, dist) rows sorted by (q, dist, node)
+    bq = np.arange(len(qids))
+    bn = np.full(len(qids), int(hub), dtype=np.int64)
+    diff = qmat - hv
+    bd = (diff * diff).sum(axis=1)
     for _ in range(hops):
-        frontier = sorted({r["node"] for r in bm.select("node").collect()})
-        buckets = sorted({int(n) % n_buckets for n in frontier})
+        frontier = np.unique(bn).tolist()
+        buckets = sorted({n % n_buckets for n in frontier})
+        # IN lists as SQL text: one py4j call, not one per literal
         adj = (
-            spark.read.parquet(corpus_path)
-            .where(F.col("bucket").isin(buckets))   # partition pruning
-            .where(F.col("src").isin([int(n) for n in frontier]))
+            index.where(F.expr(f"bucket IN ({', '.join(map(str, buckets))})"))
+            .where(F.expr(f"src IN ({', '.join(f'{n}L' for n in frontier)})"))
+            .select("src", "dst", "dv")
+            .toArrow()
         )
-        nbrs = (
-            adj.join(F.broadcast(bm.select("q_id", "__q_qv", "node")),
-                     F.col("src") == F.col("node"))
-            .select(
-                "q_id", "__q_qv",
-                F.col("dst").alias("node"),
-                _int_l2("__q_qv", "dv").alias("dist"),
-            )
+        src = np.asarray(adj["src"], dtype=np.int64)
+        o = np.argsort(src, kind="stable")
+        src = src[o]
+        dst = np.asarray(adj["dst"], dtype=np.int64)[o]
+        dv = _long_matrix(adj["dv"], "index", qmat.shape[1])[o]
+        _check_l2_range(qmat, dv)
+        # every beam row × its node's out-edges
+        lo = np.searchsorted(src, bn, "left")
+        cnt = np.searchsorted(src, bn, "right") - lo
+        edge = np.arange(cnt.sum()) + np.repeat(lo - (np.cumsum(cnt) - cnt),
+                                                cnt)
+        cq = np.repeat(bq, cnt)
+        diff = dv[edge] - qmat[cq]
+        bq, bn, bd = _top_beam(
+            np.concatenate([bq, cq]),
+            np.concatenate([bn, dst[edge]]),
+            np.concatenate([bd, (diff * diff).sum(axis=1)]),
+            beam,
         )
-        cand = bm.unionByName(nbrs)
-        bm = (
-            cand.withColumn("__rk", F.dense_rank().over(bw))
-            .where(F.col("__rk") <= beam)
-            .drop("__rk")
-            .dropDuplicates(["q_id", "node"])
-            .localCheckpoint()  # the frontier collect above needs it eager
-        )
-    out = (
-        bm.where(F.col("node") != F.col("q_id"))
-        .withColumn("__rk", F.row_number().over(bw))
-        .where(F.col("__rk") <= k)
-        .select("q_id", F.col("node").alias(id_col),
-                F.col("dist").alias("dist_sq"))
-    )
-    return out.localCheckpoint(eager=True)
+    keep = bn != qids[bq]
+    bq, bn, bd = bq[keep], bn[keep], bd[keep]
+    keep = _group_rank(bq) < k
+    return result(qids[bq[keep]], bn[keep], bd[keep])
 
 
 def build_binary_corpus(

@@ -5604,9 +5604,11 @@ def q342_nsw_partitioned_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     and src IN (...) (literal → row-group min/max skip). Gated against
     q335's OWN oracle: partition-pruned serving must be bit-identical
     to the in-memory walk on the same build, while a hop touching b of
-    8 buckets reads b/8 of the index from disk. The corpus lives in a
-    per-process mkdtemp and is removed after the localCheckpointed
-    result (the q331 hygiene)."""
+    8 buckets reads b/8 of the index from disk. Each hop is one Spark
+    job (the pruned scan); the beam is ranked on the driver and the
+    answer comes back as a local DataFrame, so the corpus can live in a
+    per-process mkdtemp that is removed before the caller's action (the
+    q331 hygiene)."""
     import shutil
     import tempfile
 

@@ -12,6 +12,7 @@ re-running the gate.
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
@@ -19,7 +20,7 @@ import duckdb
 import numpy as np
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from rdkafka_streams_spark import TABLES, get_spark  # noqa: E402
 from rdkafka_streams_spark.queries import REGISTRY  # noqa: E402

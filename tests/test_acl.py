@@ -170,7 +170,8 @@ def test_topiclog_enforcement_produce_consume_admin(spark, tmp_path):
 
 def test_acls_cli_roundtrip(tmp_path, capsys):
     import sys
-    sys.path.insert(0, "/root/repo/scripts")
+    from pathlib import Path
+    sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "scripts"))
     from topiclog_admin import main
 
     root = str(tmp_path / "bus")

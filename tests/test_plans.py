@@ -4,6 +4,9 @@ shuffle counts and pushdown do)."""
 
 from __future__ import annotations
 
+import itertools
+
+import pytest
 from pyspark.sql import functions as F
 
 from rdkafka_streams_spark.core.io import load_table
@@ -753,7 +756,72 @@ def test_ivf_cell_partitioned_corpus_prunes_at_scan(spark, sf_dir, tmp_path):
     assert "cid" in pf, f"no partition pruning on cid: {pf}"
 
 
-def test_nsw_partitioned_serve_prunes_per_hop(spark, sf_dir, tmp_path):
+# the small corpus of the partitioned-serve tests and its walk
+_NSW_BUILD = dict(r=4, n_assign=2, n_cells=4, n_iters=2)
+_NSW_WALK = dict(k=3, beam=8, hops=3)
+_SERVE_CALLS = itertools.count()
+
+
+@pytest.fixture(scope="module")
+def nsw_index(spark, sf_dir, tmp_path_factory):
+    """(emb, index path, hub, queries, in-memory answers) for the
+    bucketed NSW corpus of 300 vectors, built once per module."""
+    from rdkafka_streams_spark.llm.similarity import (
+        beam_search_integer,
+        build_nsw_corpus,
+    )
+
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").where(
+        F.col("vec_id") < 300
+    )
+    path = str(tmp_path_factory.mktemp("nsw") / "nsw_adj")
+    hub = build_nsw_corpus(emb, path, n_buckets=4, **_NSW_BUILD)
+    queries = emb.where(F.col("vec_id") % 60 == 0)
+    mem = sorted(tuple(r) for r in beam_search_integer(
+        emb, queries, **_NSW_WALK, **_NSW_BUILD
+    ).collect())
+    return emb, path, hub, queries, mem
+
+
+def _serve(spark, nsw_index, queries=None, hub_vec=None):
+    """One beam_search_partitioned call and its collect under a fresh
+    job group: (sorted rows, result schema, the group's job ids)."""
+    from rdkafka_streams_spark.llm.similarity import beam_search_partitioned
+
+    _, path, hub, default_queries, _ = nsw_index
+    sc = spark.sparkContext
+    group = f"nsw-serve-{next(_SERVE_CALLS)}"
+    sc.setJobGroup(group, "partitioned serve")
+    try:
+        df = beam_search_partitioned(
+            spark, path, hub, hub_vec,
+            default_queries if queries is None else queries,
+            n_buckets=4, **_NSW_WALK,
+        )
+        rows = sorted(tuple(r) for r in df.collect())
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return rows, df.schema, set(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _index_scans(spark, job_ids, path) -> list[str]:
+    """The parquet scan nodes over ``path`` in every SQL execution that
+    ran one of ``job_ids``, read from the session's SQL status store
+    (formatted physical plans, final AQE version)."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    execs = store.executionsList()
+    scans = []
+    for i in range(execs.size()):
+        ex = execs.apply(i)
+        if not any(ex.jobs().contains(j) for j in job_ids):
+            continue
+        for node in ex.physicalPlanDescription().split("\n\n"):
+            if "Scan parquet" in node and path in node:
+                scans.append(node)
+    return scans
+
+
+def test_nsw_partitioned_serve_prunes_per_hop(spark, nsw_index):
     """q342's standing claim — 'each hop reads only the frontier's
     adjacency' — made real: build the bucketed NSW corpus, shape a hop
     scan the way beam_search_partitioned does (bucket IN + src IN, both
@@ -762,19 +830,8 @@ def test_nsw_partitioned_serve_prunes_per_hop(spark, sf_dir, tmp_path):
     not the graph. Also pins serve ≡ in-memory equality on a small
     corpus (the artifact round-trip contract at unit scale)."""
     from rdkafka_streams_spark.core.plan import partition_filters
-    from rdkafka_streams_spark.llm.similarity import (
-        beam_search_integer,
-        beam_search_partitioned,
-        build_nsw_corpus,
-    )
 
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").where(
-        F.col("vec_id") < 300
-    )
-    path = str(tmp_path / "nsw_adj")
-    hub = build_nsw_corpus(
-        emb, path, r=4, n_assign=2, n_cells=4, n_iters=2, n_buckets=4
-    )
+    _, path, _, _, mem = nsw_index
     adj = spark.read.parquet(path)
     hop = adj.where(F.col("bucket").isin([0, 2])).where(
         F.col("src").isin([0, 2, 6])
@@ -782,16 +839,64 @@ def test_nsw_partitioned_serve_prunes_per_hop(spark, sf_dir, tmp_path):
     pf = " ".join(partition_filters(hop))
     assert "bucket" in pf, f"no partition pruning on bucket: {pf}"
 
-    queries = emb.where(F.col("vec_id") % 60 == 0)
-    served = sorted(tuple(r) for r in beam_search_partitioned(
-        spark, path, hub, None, queries,
-        k=3, beam=8, hops=3, n_buckets=4,
-    ).collect())
-    mem = sorted(tuple(r) for r in beam_search_integer(
-        emb, queries, k=3, beam=8, hops=3, r=4,
-        n_assign=2, n_cells=4, n_iters=2,
-    ).collect())
+    served, _, _ = _serve(spark, nsw_index)
     assert served == mem and len(served) > 0
+
+
+def test_nsw_partitioned_serve_one_job_per_hop(spark, nsw_index):
+    """Serve day costs one Spark job per hop: the walk ranks the beam on
+    the driver, so a request (call + collect) runs at most hops + 3 jobs
+    — the query read, the index open, the hub_vec=None lookup and one
+    pruned adjacency scan per hop. With hub_vec given, the SQL
+    executions of the call scan the index exactly once per hop, and
+    every one of those scans carries the bucket PartitionFilter."""
+    from rdkafka_streams_spark.llm.similarity import quantize_global
+
+    emb, path, hub, _, mem = nsw_index
+    served, _, jobs = _serve(spark, nsw_index)
+    assert served == mem
+    assert len(jobs) <= _NSW_WALK["hops"] + 3, sorted(jobs)
+
+    hub_vec = emb.where(F.col("vec_id") == hub).select(
+        quantize_global("embedding")
+    ).first()[0]
+    served, _, jobs = _serve(spark, nsw_index, hub_vec=hub_vec)
+    assert served == mem
+    scans = _index_scans(spark, jobs, path)
+    assert len(scans) == _NSW_WALK["hops"], scans
+    for scan in scans:
+        pf = [ln for ln in scan.splitlines()
+              if ln.startswith("PartitionFilters:")]
+        assert pf and "bucket" in pf[0], f"walk scan not pruned:\n{scan}"
+
+
+def test_nsw_partitioned_serve_edges(spark, nsw_index):
+    """The driver-side beam is keyed by query id, not row position:
+    duplicate query rows collapse to one answer set (as the window walk
+    merged them), an empty query frame returns zero bigint rows without
+    scanning the index, and a squared distance that could overflow
+    int64 raises instead of wrapping."""
+    from rdkafka_streams_spark.llm.similarity import beam_search_partitioned
+
+    _, path, hub, queries, mem = nsw_index
+    served, _, _ = _serve(spark, nsw_index,
+                          queries=queries.unionByName(queries))
+    assert served == mem
+
+    served, schema, jobs = _serve(spark, nsw_index,
+                                  queries=queries.where(F.lit(False)))
+    assert served == []
+    assert [(f.name, f.dataType.simpleString()) for f in schema] == [
+        ("q_id", "bigint"), ("vec_id", "bigint"), ("dist_sq", "bigint")
+    ]
+    assert _index_scans(spark, jobs, path) == [] and len(jobs) <= 1
+
+    dim = len(queries.select("embedding").first()[0])
+    with pytest.raises(ArithmeticError):
+        beam_search_partitioned(
+            spark, path, hub, [0] * dim, queries,
+            n_buckets=4, scale=10**12, **_NSW_WALK,
+        )
 
 
 def test_q345_weight_join_broadcasts_and_counts_bound_exchanges(spark, sf_dir):

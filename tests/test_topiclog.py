@@ -29,6 +29,12 @@ from rdkafka_streams_spark.streaming.topiclog import (
     read_topic,
 )
 
+# the admin CLI of this checkout, loaded by path
+_ADMIN_CLI = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    "scripts", "topiclog_admin.py",
+)
+
 
 @pytest.fixture()
 def root(tmp_path):
@@ -3554,7 +3560,7 @@ def test_admin_cli_roundtrip(tmp_path, capsys):
     from rdkafka_streams_spark.streaming.topiclog import TopicLog
 
     spec = importlib.util.spec_from_file_location(
-        "topiclog_admin", "/root/repo/scripts/topiclog_admin.py")
+        "topiclog_admin", _ADMIN_CLI)
     cli = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(cli)
     root = str(tmp_path)
@@ -3669,7 +3675,7 @@ def test_kip664_transaction_admin_unwedges_share_fetch(tmp_path, capsys):
 
     # forceful abort through the CLI (kafka-transactions.sh abort)
     spec = importlib.util.spec_from_file_location(
-        "topiclog_admin", "/root/repo/scripts/topiclog_admin.py")
+        "topiclog_admin", _ADMIN_CLI)
     cli = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(cli)
     rc = cli.main(["--root", root, "list-transactions", "--state", "open"])
@@ -3822,7 +3828,7 @@ def test_estate_drill_round9_surface_composes(spark, tmp_path):
 
     # --- KIP-664 unwedge through the CLI as the etl operator
     spec = importlib.util.spec_from_file_location(
-        "topiclog_admin", "/root/repo/scripts/topiclog_admin.py")
+        "topiclog_admin", _ADMIN_CLI)
     cli = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(cli)
 
@@ -4601,7 +4607,7 @@ def test_gc_share_epochs_cli(tmp_path, capsys):
         h._ensure_coordinator("q")  # epochs 0..3
 
     spec = importlib.util.spec_from_file_location(
-        "topiclog_admin", "/root/repo/scripts/topiclog_admin.py")
+        "topiclog_admin", _ADMIN_CLI)
     cli = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(cli)
     rc = cli.main(["--root", root, "gc-share-epochs", "workers", "q"])

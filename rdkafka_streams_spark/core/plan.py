@@ -52,11 +52,12 @@ def count_rr_exchanges(df: DataFrame) -> int:
     ``operators/spread.py`` widening exchange is bounded and identity at
     production scale), but it also blinded the budgets to any OTHER
     round-robin shuffle — a plain ``.repartition(n)`` on a corpus-sized
-    frame, the classic scale-killer. Only ``scripts/scale_cert.py`` reads
-    this count: it records it per query next to the keyed count, and its
-    plan sweep sets ``rr_zero_at_widest`` (and prints a stderr warning
-    when false) at the widest multi-split replica, where spread should be
-    out of every plan. The plan budget tests do not bound it."""
+    frame, the classic scale-killer. ``tests/test_plans.py`` pins it
+    exactly per budgeted query, and ``scripts/scale_cert.py`` records it
+    per query next to the keyed count; its plan sweep sets
+    ``rr_zero_at_widest`` (and prints a stderr warning when false) at the
+    widest multi-split replica, where spread should be out of every
+    plan."""
     plan = plan_string(df, "simple")
     return sum(
         1

@@ -15,8 +15,6 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column
-from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import DoubleType
 
@@ -37,21 +35,6 @@ def mean_norm_grouped(v: pd.Series) -> float:  # grouped-agg pandas UDF
     """Grouped-aggregate pandas UDF: mean L2 norm of a group's vectors."""
     norms = v.map(lambda a: float(np.sqrt((np.asarray(a, dtype=np.float64) ** 2).sum())))
     return float(norms.mean())
-
-
-def norm_column(vec_col: str | Column) -> Column:
-    """The built-in equivalent of ``vector_norm`` — preferred in production
-    (JVM-side, no Arrow transfer). Kept beside the UDF to document the
-    policy: the UDF exists for user extensibility, not because Spark lacks
-    the expression."""
-    c = F.col(vec_col) if isinstance(vec_col, str) else vec_col
-    return F.sqrt(
-        F.aggregate(
-            F.transform(c, lambda x: x.cast("double") * x.cast("double")),
-            F.lit(0.0),
-            lambda a, x: a + x,
-        )
-    )
 
 
 @pandas_udf(DoubleType())

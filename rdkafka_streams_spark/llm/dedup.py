@@ -13,7 +13,6 @@ md5("{s}:" + token), signature = per-seed min of the hex strings. md5 hex is
 uniformly distributed, so string-min is a valid min-hash, and any SQL engine
 reproduces it exactly — which makes the whole LSH pipeline oracle-checkable
 (unlike MLlib's MinHashLSH whose random coefficients are engine-private).
-An MLlib-backed variant is provided for API parity (gated import).
 
 Scale notes: every step is expressed as explode → groupBy/join on bounded
 keys. The banding join keys are (band_index, band_value) — high cardinality,
@@ -441,34 +440,6 @@ def simhash(
         for j in range(n_bits)
     )
     return sums.select(id_col, sig.alias("simhash"))
-
-
-def mllib_minhash_pairs(
-    docs: DataFrame,
-    threshold: float = 0.6,
-    num_hash_tables: int = 8,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-):
-    """MLlib MinHashLSH variant (production fast path; engine-private RNG so
-    no cross-engine oracle — covered by rows-only checks/unit tests)."""
-    from pyspark.ml.feature import HashingTF, MinHashLSH, Tokenizer
-
-    tk = Tokenizer(inputCol=text_col, outputCol="__toks")
-    tf = HashingTF(inputCol="__toks", outputCol="__features", numFeatures=1 << 18)
-    feat = tf.transform(tk.transform(docs)).where(F.size("__toks") > 0)
-    model = MinHashLSH(
-        inputCol="__features", outputCol="__hashes", numHashTables=num_hash_tables, seed=42
-    ).fit(feat)
-    pairs = model.approxSimilarityJoin(feat, feat, 1.0 - threshold, distCol="__dist")
-    return (
-        pairs.where(F.col(f"datasetA.{id_col}") < F.col(f"datasetB.{id_col}"))
-        .select(
-            F.col(f"datasetA.{id_col}").alias("id1"),
-            F.col(f"datasetB.{id_col}").alias("id2"),
-            (1.0 - F.col("__dist")).alias("jaccard_est"),
-        )
-    )
 
 
 def duplicate_span_coverage(

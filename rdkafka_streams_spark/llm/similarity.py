@@ -8,7 +8,7 @@ The scale path is IVF-style pruning: restrict candidates to the query's
 coarse cell (here the precomputed ``label`` column stands in for a coarse
 quantizer assignment). At 100 TB the table is partitioned by cell id, so the
 candidate join prunes partitions instead of scanning the corpus; the same
-plan shape serves a real KMeans-assigned cell column.
+plan shape serves the cell column ``kmeans_integer`` assigns.
 
 All float→double casts happen per element *before* multiply so any oracle
 computing in double matches bit-for-bit (modulo summation order — cosine is
@@ -326,87 +326,6 @@ def quantized_topk(
     )
 
 
-# --------------------------------------------------------------- IVF (real)
-def build_ivf_index(
-    emb: DataFrame,
-    n_cells: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = 42,
-) -> tuple[DataFrame, DataFrame]:
-    """IVF coarse quantizer: KMeans over the corpus → (assignments, centroids).
-
-    assignments = emb + ``__cell`` (the inverted lists); centroids =
-    (cell, centroid array). At 100 TB: train on a sample, assign in one pass,
-    and *write the table partitioned by cell* — then a search touching
-    nprobe cells is partition pruning, not a filter. KMeans internals are
-    engine-private (seeded but not SQL-reproducible) → the recall contract
-    is unit-tested against brute force instead of a SQL oracle.
-    """
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector, vector_to_array
-
-    feat = emb.withColumn("__features", array_to_vector(F.col(vec_col).cast("array<double>")))
-    model = KMeans(k=n_cells, seed=seed, featuresCol="__features", predictionCol="__cell").fit(feat)
-    assigned = model.transform(feat).drop("__features")
-    centroids = [(i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())]
-    spark = emb.sparkSession
-    cent = spark.createDataFrame(centroids, f"__cell int, centroid array<double>")
-    return assigned, cent
-
-
-def ivf_search(
-    assigned: DataFrame,
-    centroids: DataFrame,
-    queries: DataFrame,
-    k: int = 3,
-    nprobe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """ANN top-k: probe the ``nprobe`` nearest cells per query, brute-force
-    only inside them.
-
-    Candidate fraction ≈ nprobe/n_cells of the corpus — the knob trading
-    recall for scan cost. Centroids and queries are broadcast (tiny); the
-    candidate join hits the inverted lists on the cell key (partition
-    pruning when the table is written partitioned by cell).
-    """
-    # Norms are per-VECTOR: compute q_nrm once per query and __nrm once per
-    # corpus row BEFORE the candidate join, so each (candidate, query) pair
-    # does a single dot fold — not a dot plus two redundant interpreted-lambda
-    # norm folds (the ~3× overhead cosine_topk already factors out).
-    q = queries.select(
-        F.col(id_col).alias("q_id"),
-        F.col(vec_col).alias("q_emb"),
-        _norm(vec_col).alias("q_nrm"),
-    )
-    qcos = _dot(F.col("q_emb"), F.col("centroid")) / (
-        F.col("q_nrm") * _norm(F.col("centroid"))
-    )
-    probe_w = Window.partitionBy("q_id").orderBy(F.col("_c").desc(), F.col("__cell"))
-    probes = (
-        q.crossJoin(F.broadcast(centroids))
-        .select("q_id", "q_emb", "q_nrm", "__cell", qcos.alias("_c"))
-        .withColumn("pr", F.row_number().over(probe_w))
-        .where(F.col("pr") <= nprobe)
-        .select("q_id", "q_emb", "q_nrm", "__cell")
-    )
-    cand = (
-        assigned.withColumn("__nrm", _norm(vec_col))
-        .join(F.broadcast(probes), "__cell")
-        .where(F.col(id_col) != F.col("q_id"))
-    )
-    cos = _dot(vec_col, "q_emb") / (F.col("__nrm") * F.col("q_nrm"))
-    w = Window.partitionBy("q_id").orderBy(F.col("_cos").desc(), F.col(id_col))
-    return (
-        cand.select("q_id", id_col, cos.alias("_cos"))
-        .withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= k)
-        .select("q_id", id_col, F.round("_cos", 6).alias("cos"))
-    )
-
-
 def embedding_dim_stats(
     emb: DataFrame,
     vec_col: str = "embedding",
@@ -567,57 +486,25 @@ def pq_search_adc(
     )
 
 
-def _pq_sub_width(
-    emb: DataFrame, m: int, vec_col: str, strict: bool = False
-) -> int:
+def _pq_sub_width(emb: DataFrame, m: int, vec_col: str) -> int:
     """Subvector width for m PQ blocks — the shared dim probe + index
-    math (one definition, so the two trainers cannot drift). ``strict``
-    raises on indivisible dims (the oracle-exact trainer must cover
-    every dim); the production trainer keeps its historical
-    truncate-trailing-dims behavior. Raises the module's 'empty corpus'
-    ValueError instead of an opaque NoneType crash on an empty or
-    NULL-embedding probe row."""
+    math of every PQ/IVF-PQ trainer. Raises ValueError on a dim that
+    does not divide into m blocks (every block must cover the same
+    number of dims, and no trailing dim may be dropped), and the
+    module's 'empty corpus' ValueError instead of an opaque NoneType
+    crash on an empty or NULL-embedding probe row."""
     row = emb.select(vec_col).first()
     if row is None or row[0] is None:
         raise ValueError("no vectors (empty corpus or NULL embedding?)")
     dim = len(row[0])
-    if strict and dim % m != 0:
+    if dim % m != 0:
         raise ValueError(f"dim {dim} not divisible into {m} subspaces")
     return dim // m
 
 
 def _pq_block_slice(vec_col: str, j: int, sub: int):
-    """The j-th subvector (1-based slice) — shared by both trainers."""
+    """The j-th subvector (1-based slice) — shared by every PQ trainer."""
     return F.slice(F.col(vec_col), j * sub + 1, sub)
-
-
-def build_pq_codebooks(
-    emb: DataFrame,
-    m: int = 8,
-    n_codes: int = 16,
-    vec_col: str = "embedding",
-    seed: int = 42,
-) -> list[list[list[float]]]:
-    """KMeans-trained PQ codebooks (the production path): one KMeans per
-    subvector block. At 100 TB: train on a sample (codebooks are tiny and
-    converge fast), encode in one pass with pq_encode. Returns the same
-    nested-list shape as pq_codebooks, so encode/search are shared —
-    KMeans internals are engine-private, so this path is recall-tested
-    against brute force instead of SQL-oracled (same contract as IVF)."""
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    sub = _pq_sub_width(emb, m, vec_col)
-    out = []
-    for j in range(m):
-        block = emb.select(
-            array_to_vector(
-                _pq_block_slice(vec_col, j, sub).cast("array<double>")
-            ).alias("__f")
-        )
-        model = KMeans(k=n_codes, seed=seed + j, featuresCol="__f").fit(block)
-        out.append([[float(x) for x in c] for c in model.clusterCenters()])
-    return out
 
 
 def knn_graph(
@@ -762,10 +649,9 @@ def kmeans_integer(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> tuple[DataFrame, list[tuple[int, list[int]]]]:
-    """Lloyd's k-means in INTEGER arithmetic — the oracle-checkable IVF
-    coarse quantizer (``build_ivf_index``'s MLlib KMeans is engine-
-    private; this trainer is exactly SQL-replicable, so IVF TRAINING
-    itself enters the correctness gate, not just its recall).
+    """Lloyd's k-means in INTEGER arithmetic — the library's one IVF
+    coarse quantizer. It is exactly SQL-replicable, so IVF TRAINING
+    itself enters the correctness gate, not just its recall.
 
     Determinism, piece by piece: vectors quantize under one global scale
     (``quantize_global``); the k seeds are the corpus rows ordered by
@@ -851,12 +737,11 @@ def ivf_search_integer(
     nearest cells (integer L2 to the centroids, ties to smaller cid),
     and take the ``k`` nearest candidates within the probed cells (ties
     to smaller id). Every number on the path is a bigint, so train,
-    probe, AND search are all value-hash-checkable against SQL — the
-    contract ``build_ivf_index`` (engine-private MLlib KMeans) cannot
-    offer. Returns (q_id, id, dist_sq).
+    probe, AND search are all value-hash-checkable against SQL.
+    Returns (q_id, id, dist_sq).
 
-    Scale posture is ``ivf_search``'s: centroids broadcast (k×dim
-    longs), the candidate join hits the inverted lists on the cell key
+    Scale posture: centroids broadcast (k×dim longs), the candidate
+    join hits the inverted lists on the cell key
     (partition pruning when the corpus is written partitioned by cell),
     candidate fraction ≈ nprobe/n_cells."""
     spark = emb.sparkSession
@@ -899,10 +784,8 @@ def build_pq_codebooks_integer(
     vec_col: str = "embedding",
 ) -> list[tuple[int, DataFrame, list[tuple[int, list[int]]]]]:
     """ORACLE-EXACT PQ codebook training: one ``kmeans_integer`` per
-    subvector block. ``build_pq_codebooks`` (MLlib KMeans per block) is
-    the production fast path but its internals are engine-private, so
-    its contract is recall-vs-brute-force; this trainer makes PQ
-    TRAINING itself value-hash-checkable — every subspace inherits the
+    subvector block — the library's one PQ trainer, so PQ TRAINING
+    itself is value-hash-checkable — every subspace inherits the
     integer trainer's determinism (global quantization, md5 seeding,
     tie-breaks, truncating means, empty-cluster carry). Subvector
     slicing happens BEFORE quantization, so each block trains on
@@ -930,7 +813,7 @@ def build_pq_codebooks_integer(
             "n_iters must be >= 1 (there is no assignment against raw "
             "seeds to return)"
         )
-    sub = _pq_sub_width(emb, m, vec_col, strict=True)
+    sub = _pq_sub_width(emb, m, vec_col)
     q = _spread(emb.select(
         F.col(id_col),
         *[
@@ -1106,7 +989,7 @@ def pq_search_adc_integer(
     queries broadcast with their precomputed tables; one top-k window
     per query. Ties break (adist, id) ascending. Returns
     (q_id, id, adist)."""
-    sub = _pq_sub_width(emb, m, vec_col, strict=True)
+    sub = _pq_sub_width(emb, m, vec_col)
     blocks = build_pq_codebooks_integer(
         emb, m=m, n_codes=n_codes, n_iters=n_iters, scale=scale,
         id_col=id_col, vec_col=vec_col,
@@ -1173,7 +1056,7 @@ def ivfpq_search_integer(
             f"saved codebooks have m={len(codebooks)} blocks, caller "
             f"asked m={m} — a block-count mismatch mis-slices every code"
         )
-    sub = _pq_sub_width(emb, m, vec_col, strict=True)
+    sub = _pq_sub_width(emb, m, vec_col)
     cents = (
         coarse if coarse is not None
         else kmeans_integer(
@@ -1256,7 +1139,7 @@ def ivfpq_residual_search_integer(
     (nprobe × m × n_codes longs per query, still broadcast-sized).
     Returns (q_id, id, adist); ties (adist, id) ascending."""
     spark = emb.sparkSession
-    sub = _pq_sub_width(emb, m, vec_col, strict=True)
+    sub = _pq_sub_width(emb, m, vec_col)
     _assigned, cents = kmeans_integer(
         emb, k=n_cells, n_iters=coarse_iters, scale=scale,
         id_col=id_col, vec_col=vec_col,

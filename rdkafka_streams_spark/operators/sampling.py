@@ -21,11 +21,6 @@ def hash_sample(df: DataFrame, key: str | Column, percent: int, modulus: int = 9
     return df.where(keep)
 
 
-def bernoulli_sample(df: DataFrame, fraction: float, seed: int = 42) -> DataFrame:
-    """Engine-native Bernoulli sampling (fast path, not cross-engine stable)."""
-    return df.sample(fraction=fraction, seed=seed)
-
-
 def temperature_sample(
     df: DataFrame,
     group_col: str,

@@ -15,6 +15,14 @@ frame has materially fewer partitions than the cluster's parallelism it
 inserts one round-robin repartition so downstream per-row work runs
 wide; otherwise it is the identity (NO exchange added at scale).
 
+The width it compares is a count of FILES for a file scan (the number
+of entries in the relation's file index), of RDD partitions for a
+checkpointed leaf, and 1 for literal rows — not of scan splits. Every
+fixture file is one row group, so files = splits there. A large file
+with several row groups scans as several tasks; there the count
+under-states the width and the guard may add one exchange the scan did
+not need, but it never leaves a one-task scan narrow.
+
 Round-robin repartition is deterministic under task retries (Spark
 sorts partitions before redistributing, SPARK-23207), and callers only
 apply it upstream of key-partitioned shuffles, global aggregates or
@@ -28,9 +36,9 @@ RDD partitions) — instead of ``df.rdd.getNumPartitions()``, which ran
 full physical planning on every call (~0.5-1 s of driver time per
 site per query build) and under AQE would eagerly MATERIALIZE shuffle
 stages for any non-scan caller. Non-narrow or unrecognized plans make
-the guard the identity (the safe direction), as does any failure of
-the size probe: if the stats API drifts and raises, the guard stays
-OUT instead of silently flipping to always-on.
+the guard the identity (the safe direction). A FAILING probe is not an
+unrecognized plan: it raises, because a swallowed probe error would
+switch the guard off everywhere with every plan still valid.
 """
 
 from __future__ import annotations
@@ -64,11 +72,10 @@ def _narrow_width(df: DataFrame) -> int | None:
     """If the optimized logical plan is a whitelist-only tree (no join/
     aggregate/window/sort/repartition — nothing that plans an exchange),
     return the scan width of its leaf: file count for a file relation
-    (every fixture file is one row group, so files ≈ splits; for large
-    files this over-counts splits, which only makes the guard skip —
-    the safe direction), RDD partition count for a checkpointed leaf,
-    1 for literal rows. Returns None (identity) for non-narrow or
-    unknown plans, and on any introspection failure.
+    (every fixture file is one row group, so files = splits), RDD
+    partition count for a checkpointed leaf, 1 for literal rows.
+    Returns None (identity) for non-narrow or unknown plans; an
+    introspection failure raises.
 
     This replaces the previous ``df.rdd.getNumPartitions()`` probe
     (advice-r15): ``.rdd`` runs full physical planning on every call —
@@ -76,32 +83,31 @@ def _narrow_width(df: DataFrame) -> int | None:
     and under AQE would eagerly MATERIALIZE shuffle stages if a caller
     ever passed a non-scan frame. The logical-plan walk costs
     milliseconds and cannot execute anything."""
-    try:
-        plan = df._jdf.queryExecution().optimizedPlan()
-        width = 0
-        stack = [plan]
-        while stack:
-            node = stack.pop()
-            cls = node.getClass().getSimpleName()
-            if cls not in _NARROW_NODES:
-                return None
-            ch = node.children()
-            if ch.size() == 0:
-                if cls == "LogicalRelation":
-                    rel = node.relation()
-                    width += rel.location().inputFiles().length
-                elif cls in ("DataSourceV2Relation",
-                             "DataSourceV2ScanRelation"):
-                    return None  # no cheap width probe; fail to identity
-                elif cls == "LogicalRDD":
-                    width += node.rdd().getNumPartitions()
-                else:  # LocalRelation / View leaf: driver-local rows
-                    width += 1
-            for i in range(ch.size()):
-                stack.append(ch.apply(i))
-        return width or None
-    except Exception:
-        return None
+    plan = df._jdf.queryExecution().optimizedPlan()
+    width = 0
+    stack = [plan]
+    while stack:
+        node = stack.pop()
+        cls = node.getClass().getSimpleName()
+        if cls not in _NARROW_NODES:
+            return None
+        ch = node.children()
+        if ch.size() == 0:
+            if cls == "LogicalRelation":
+                rel = node.relation()
+                if rel.getClass().getSimpleName() != "HadoopFsRelation":
+                    return None  # JDBC etc.: no file index to count
+                width += len(rel.location().inputFiles())
+            elif cls in ("DataSourceV2Relation",
+                         "DataSourceV2ScanRelation"):
+                return None  # no cheap width probe; fail to identity
+            elif cls == "LogicalRDD":
+                width += node.rdd().getNumPartitions()
+            else:  # LocalRelation / View leaf: driver-local rows
+                width += 1
+        for i in range(ch.size()):
+            stack.append(ch.apply(i))
+    return width or None
 
 
 def spread(df: DataFrame, min_bytes: int = 0) -> DataFrame:
@@ -130,12 +136,9 @@ def spread(df: DataFrame, min_bytes: int = 0) -> DataFrame:
     if width * 2 > par:
         return df
     if min_bytes:
-        try:
-            est = int(
-                df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-            )
-        except Exception:
-            return df  # stats API drift: fail toward identity, not always-on
+        est = int(
+            df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+        )
         if est < min_bytes:
             return df
     return df.repartition(par)

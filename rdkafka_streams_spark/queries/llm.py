@@ -1277,9 +1277,9 @@ def q108_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     m=8 nearest-centroid codes (32× smaller than float32), queries stay
     exact, and each candidate costs an O(m) centroid lookup instead of a
     64-element fold. Codebooks here are the deterministic md5-derived set
-    (pq_codebooks) so encode AND search are fully oracle-checked; the
-    KMeans-trained production path (build_pq_codebooks) shares this exact
-    plan and is recall-tested in tests/test_operators.py."""
+    (pq_codebooks) so encode AND search are fully oracle-checked; trained
+    codebooks take the integer path (build_pq_codebooks_integer →
+    pq_search_adc_integer, q307/q308), oracle-checked end to end."""
     from rdkafka_streams_spark.llm.similarity import pq_codebooks, pq_encode, pq_search_adc
 
     emb = _t(spark, sf_dir, "embeddings")
@@ -2801,12 +2801,10 @@ def q304_kmeans_integer(spark: SparkSession, sf_dir: str) -> DataFrame:
     algorithm, k=8, 3 iterations, over globally-quantized integer
     embeddings — md5-ordered seeding, min-integer-L2 assignment (ties to
     smaller cid), truncating integer per-dim means, empty clusters
-    carrying their centroid. The existing IVF (q55) trains with MLlib
-    KMeans whose internals are engine-private (recall-tested against
-    brute force); this trainer is integer-exact end to end, so the
-    TRAINING ALGORITHM itself is value-hash-checked against the oracle's
-    unrolled iterations. Output: every (cid, dim) centroid coordinate +
-    member counts after the final assignment. Per iteration: one
+    carrying their centroid. This trainer is integer-exact end to end,
+    so the TRAINING ALGORITHM itself is value-hash-checked against the
+    oracle's unrolled iterations. Output: every (cid, dim) centroid
+    coordinate + member counts after the final assignment. Per iteration: one
     broadcast-assignment pass + one k×dim-group shuffle; centroids are
     driver metadata (the BPE-rules contract)."""
     from rdkafka_streams_spark.llm.similarity import kmeans_integer
@@ -2922,8 +2920,7 @@ def q307_pq_train_integer(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ORACLE-EXACT PQ codebook training (llm/similarity.py
     build_pq_codebooks_integer): one integer k-means per 16-dim
     subvector block (4 blocks × 4 codes × 2 iterations) — the
-    production trainer (build_pq_codebooks, MLlib per block) is
-    engine-private and recall-contracted; here PQ TRAINING itself is
+    library's one PQ trainer, so PQ TRAINING itself is
     value-hash-checked, every subspace replaying the q304 trainer's
     determinism on its slice. Output: every (subspace, code, dim)
     codebook coordinate + per-code member counts. Scale: each block is

@@ -13,6 +13,7 @@ from rdkafka_streams_spark.core.io import load_table
 from rdkafka_streams_spark.core.plan import (
     count_exchanges,
     count_key_exchanges,
+    count_rr_exchanges,
     has_broadcast_join,
     has_operator,
     pushed_filters,
@@ -456,14 +457,55 @@ def test_new_ops_shuffle_budgets(spark, sf_dir):
         # the join alone
         "q325_sketch_drift": 11,
     }
+    # round-robin exchanges are pinned EXACTLY, not bounded: on the
+    # one-file fixtures the spread guard (operators/spread.py) widens the
+    # md5-per-window paths of the exact-substring family once per side,
+    # and nothing else in a budgeted plan may round-robin — a stray
+    # .repartition(n) fails here, and so does a guard gone dead
+    rr_expected = {
+        "q299_exact_substring_spans": 2,
+        "q300_exact_substring_excise": 2,
+        "q302_exact_substring_incremental": 2,
+    }
     for name, budget in budgets.items():
         df = REGISTRY[name].fn(spark, sf_dir)
         # keyed exchanges only: the budgets pin corpus-keyed shuffle
-        # growth; the adaptive spread guard (operators/spread.py) adds
-        # round-robin widening exchanges on NARROW (small-file) inputs
-        # that are identity at production scale and are excluded here
+        # growth; the spread guard's round-robin widening exchanges are
+        # identity at production scale and are counted separately below
         got = count_key_exchanges(df)
         assert got <= budget, f"{name}: {got} keyed exchanges > budget {budget}"
+        rr = count_rr_exchanges(df)
+        want = rr_expected.get(name, 0)
+        assert rr == want, f"{name}: {rr} round-robin exchanges, expected {want}"
+
+
+def test_spread_widens_only_narrow_scans(spark, sf_dir, tmp_path):
+    """The spread guard (operators/spread.py) adds exactly one round-robin
+    exchange to a narrow scan and none anywhere else. Its failure mode is
+    silence — a probe that stops recognizing scans leaves every plan
+    valid and merely narrow — so each branch is pinned on a real plan."""
+    from pathlib import Path
+
+    from rdkafka_streams_spark.operators.spread import FOLD_MIN_BYTES, spread
+
+    docs = load_table(spark, sf_dir, "documents")
+    # one-file fixture scan: one task → widened once
+    assert count_rr_exchanges(spread(docs.select("doc_id", "text"))) == 1
+    # a join can hide an exchange: never widened
+    joined = docs.join(docs.select("doc_id"), "doc_id")
+    assert count_rr_exchanges(spread(joined)) == 0
+    # a scan already wider than half the cluster: identity
+    n_files = spark.sparkContext.defaultParallelism // 2 + 1
+    wide = str(tmp_path / "wide")
+    spark.range(64 * n_files).repartition(n_files).write.parquet(wide)
+    assert len(spark.read.parquet(wide).inputFiles()) == n_files
+    assert count_rr_exchanges(spread(spark.read.parquet(wide))) == 0
+    # 2,000 vectors sit below the fold break-even: the size gate keeps
+    # the guard out even though the scan is one file
+    data = Path(__file__).resolve().parent.parent / "perfbench" / "data"
+    emb = spark.read.parquet(str(data / "embeddings.parquet"))
+    assert count_rr_exchanges(spread(emb)) == 1
+    assert count_rr_exchanges(spread(emb, min_bytes=FOLD_MIN_BYTES)) == 0
 
 
 def test_q22_window_keys_scale_with_data(spark, sf_dir):
@@ -486,46 +528,6 @@ def test_gapfill_calendar_broadcasts(spark, sf_dir):
     # a shuffle join here would move the fact-sized side twice
     df = REGISTRY["q69_gapfill_locf"].fn(spark, sf_dir)
     assert has_broadcast_join(df)
-
-
-def test_ivf_partitioned_by_cell_prunes(spark, sf_dir, tmp_path):
-    """The IVF scale contract (llm/similarity.py build_ivf_index docstring):
-    written partitioned by cell, an nprobe search becomes directory-level
-    partition pruning — the scan must carry a PartitionFilters entry on
-    __cell, so probing 2 of N cells reads 2/N of the corpus."""
-    from pyspark.sql import functions as F
-
-    from rdkafka_streams_spark.core.plan import partition_filters
-    from rdkafka_streams_spark.llm.similarity import build_ivf_index
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    assigned, _cent = build_ivf_index(emb, n_cells=4)
-    path = str(tmp_path / "ivf_cells")
-    assigned.write.partitionBy("__cell").parquet(path)
-
-    probe = spark.read.parquet(path).where(F.col("__cell").isin(0, 1))
-    pf = " ".join(partition_filters(probe))
-    assert "__cell" in pf, f"no partition pruning on cell: {pf}"
-
-
-def test_ivf_search_norms_factored_below_candidate_join(spark, sf_dir):
-    """ivf_search computes per-vector norms BELOW the candidate join (once
-    per corpus row / per query), never per (candidate, query) pair: the
-    scored projection above the join must contain exactly one interpreted
-    fold (the dot) and zero norm folds. Per-pair norm recompute tripled the
-    interpreted-lambda work of the pair-dense stage."""
-    from rdkafka_streams_spark.llm.similarity import build_ivf_index, ivf_search
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.where(F.col("vec_id") < 5)
-    assigned, cent = build_ivf_index(emb, n_cells=4)
-    df = ivf_search(assigned, cent, queries, k=3, nprobe=2)
-    opt = df._jdf.queryExecution().optimizedPlan().toString()
-    lines = opt.splitlines()
-    join_idx = next(i for i, l in enumerate(lines) if "Join" in l)
-    above = "\n".join(lines[:join_idx])
-    assert above.count("aggregate(") == 1, f"extra folds above candidate join:\n{above}"
-    assert "transform(" not in above, f"norm fold above candidate join:\n{above}"
 
 
 def test_column_pruning_reaches_scan(spark, sf_dir):

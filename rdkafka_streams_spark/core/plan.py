@@ -8,6 +8,8 @@ broadcast presence, pushdown) at tiny scale — the properties that survive a
 
 from __future__ import annotations
 
+from typing import NamedTuple
+
 from pyspark.sql import DataFrame
 
 
@@ -18,58 +20,47 @@ def plan_string(df: DataFrame, mode: str = "formatted") -> str:
     )
 
 
-def count_exchanges(df: DataFrame) -> int:
-    """Number of shuffle exchanges in the plan (broadcast exchanges excluded)."""
-    plan = plan_string(df, "simple")
-    return sum(
-        1
-        for line in plan.splitlines()
-        if "Exchange" in line and "BroadcastExchange" not in line
-    )
+class ExchangeCounts(NamedTuple):
+    """Shuffle exchanges in a plan, broadcasts excluded; ``sum()`` of
+    the two is every shuffle.
+
+    ``keyed`` excludes round-robin repartitions. The scale-honesty
+    budgets pin KEYED corpus shuffles — the ones that grow with data; a
+    round-robin exchange is the adaptive ``operators/spread.py`` guard
+    widening a narrow (small-file) input, which is identity at
+    production scale and must not trip a budget that exists to catch
+    keyed-shuffle growth.
+
+    ``rr`` counts exactly those round-robin exchanges, so the budgets
+    are not blind to any OTHER round-robin shuffle — a plain
+    ``.repartition(n)`` on a corpus-sized frame, the classic
+    scale-killer. ``tests/test_plans.py`` pins it exactly per budgeted
+    query, and ``scripts/scale_cert.py`` records it per query next to
+    the keyed count; its plan sweep sets ``rr_zero_at_widest`` (and
+    prints a stderr warning when false) at the widest multi-split
+    replica, where spread should be out of every plan."""
+
+    keyed: int
+    rr: int
 
 
-def count_key_exchanges(df: DataFrame) -> int:
-    """Shuffle exchanges excluding round-robin repartitions (and
-    broadcasts). The scale-honesty budgets pin KEYED corpus shuffles —
-    the ones that grow with data; a round-robin exchange here is the
-    adaptive ``operators/spread.py`` guard widening a narrow (small-
-    file) input, which is identity at production scale and must not
-    trip a budget that exists to catch keyed-shuffle growth."""
-    plan = plan_string(df, "simple")
-    return sum(
-        1
-        for line in plan.splitlines()
-        if "Exchange" in line
-        and "BroadcastExchange" not in line
-        and "RoundRobinPartitioning" not in line
-    )
-
-
-def count_rr_exchanges(df: DataFrame) -> int:
-    """Round-robin shuffle exchanges in the plan — the companion gate to
-    ``count_key_exchanges`` (r16, re-arming what the r15 split disarmed):
-    excluding round-robin from the keyed budgets was correct (the
-    ``operators/spread.py`` widening exchange is bounded and identity at
-    production scale), but it also blinded the budgets to any OTHER
-    round-robin shuffle — a plain ``.repartition(n)`` on a corpus-sized
-    frame, the classic scale-killer. ``tests/test_plans.py`` pins it
-    exactly per budgeted query, and ``scripts/scale_cert.py`` records it
-    per query next to the keyed count; its plan sweep sets
-    ``rr_zero_at_widest`` (and prints a stderr warning when false) at the
-    widest multi-split replica, where spread should be out of every
-    plan."""
-    plan = plan_string(df, "simple")
-    return sum(
-        1
-        for line in plan.splitlines()
-        if "Exchange" in line
-        and "BroadcastExchange" not in line
-        and "RoundRobinPartitioning" in line
-    )
+def exchange_counts(df: DataFrame) -> ExchangeCounts:
+    """Keyed and round-robin shuffle exchanges of ``df``'s plan, parsed
+    once (see ``ExchangeCounts``)."""
+    keyed = rr = 0
+    for line in plan_string(df, "simple").splitlines():
+        if "Exchange" not in line or "BroadcastExchange" in line:
+            continue
+        if "RoundRobinPartitioning" in line:
+            rr += 1
+        else:
+            keyed += 1
+    return ExchangeCounts(keyed, rr)
 
 
 def has_broadcast_join(df: DataFrame) -> bool:
-    return "BroadcastHashJoin" in plan_string(df, "simple") or "BroadcastNestedLoopJoin" in plan_string(df, "simple")
+    plan = plan_string(df, "simple")
+    return "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan
 
 
 def has_operator(df: DataFrame, name: str) -> bool:

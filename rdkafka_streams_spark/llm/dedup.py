@@ -495,7 +495,6 @@ def ppjoin_pairs(
     id_col: str = "doc_id",
     text_col: str = "text",
     shingle_n: int = 3,
-    materialize: bool = False,
 ) -> DataFrame:
     """All-pairs set-similarity join via prefix filtering (the PPJoin
     family), the *exact* complement of MinHash-LSH: every pair with
@@ -518,24 +517,19 @@ def ppjoin_pairs(
     test are engine-exact. Shuffles: element-df join, per-doc sort, prefix
     posting join, verify join — all equi-joins on well-spread keys.
 
-    ``materialize`` snapshots the ordered-prefix frame once
-    (``localCheckpoint(eager=True)``, the repo's snapshot primitive —
-    executor-resident blocks, cluster-correct, released with the frame,
-    never a session-lifetime catalog cache) for its THREE consumers
-    (prefix postings, verify-left, verify-right); the lazy plan instead
-    recomputes the tokenize→df-join→sort diamond three times (Spark cannot
-    reuse the exchange across differently-pruned subtrees — 8 parquet
-    scans of the corpus). MEASURED r8 at 1×/8×/32× of sf0.1 (9 → 290 MB
-    of text, disjoint-shingle replicas): lazy 6.6 / 10.4 / 30.5 s vs
-    materialized 7.3 / 11.7 / 38.7 s — lazy wins at EVERY size and the
-    margin widens with data, so there is no crossover through 32×. Cause:
-    per_doc's rows carry the full shingle arrays (~10× the source text
-    bytes), and snapshotting that derived table costs more than
-    re-deriving it — a ratio that is scale-INVARIANT, not a small-data
-    artifact, since both sides grow linearly. Default False (lazy)
-    therefore, certified rather than argued; flip it only where a scan is
-    genuinely expensive relative to local serialization (cold object
-    storage, compute-heavy tokenization), and re-measure there."""
+    The ordered-prefix frame has THREE consumers (prefix postings,
+    verify-left, verify-right), and the plan stays lazy: it recomputes
+    the tokenize→df-join→sort diamond three times (Spark cannot reuse
+    the exchange across differently-pruned subtrees — 8 parquet scans of
+    the corpus) rather than snapshot it. MEASURED r8 at 1×/8×/32× of
+    sf0.1 (9 → 290 MB of text, disjoint-shingle replicas): lazy 6.6 /
+    10.4 / 30.5 s vs a ``localCheckpoint`` snapshot 7.3 / 11.7 / 38.7 s —
+    lazy wins at EVERY size and the margin widens with data, so there is
+    no crossover through 32×. Cause: per_doc's rows carry the full
+    shingle arrays (~10× the source text bytes), and snapshotting that
+    derived table costs more than re-deriving it — a ratio that is
+    scale-INVARIANT, not a small-data artifact, since both sides grow
+    linearly."""
     tok = docs.select(
         id_col, F.explode(token_shingles(text_col, shingle_n)).alias("tok")
     )
@@ -556,8 +550,6 @@ def ppjoin_pairs(
             + 1,
         )
     )
-    if materialize:
-        per_doc = per_doc.localCheckpoint(eager=True)
     prefix = per_doc.select(
         F.col(id_col), "m", F.explode(F.slice("toks", 1, F.col("p"))).alias("ptok")
     )

@@ -79,11 +79,8 @@ def cosine_topk(
 
     cos = _dot(vec_col, "q_emb") / (F.col("__nrm") * F.col("q_nrm"))
     scored = pairs.select("q_id", id_col, cos.alias("_cos"))
-    w = Window.partitionBy("q_id").orderBy(F.col("_cos").desc(), F.col(id_col))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= k)
-        .select("q_id", id_col, F.round("_cos", 6).alias("cos"))
+    return _top_k(scored, "q_id", F.col("_cos").desc(), id_col, k).select(
+        "q_id", id_col, F.round("_cos", 6).alias("cos")
     )
 
 
@@ -228,14 +225,11 @@ def hamming_topk(
     sig = hyperplane_signature(vec_col, planes)
     codes = emb.select(F.col(id_col), sig.alias("code"))
     qc = queries.select(F.col(id_col).alias("q_id"), sig.alias("q_code"))
-    w = Window.partitionBy("q_id").orderBy("dist", id_col)
-    return (
+    return _top_k(
         codes.join(F.broadcast(qc), F.col(id_col) != F.col("q_id"))
-        .withColumn("dist", F.expr("bit_count(code ^ q_code)").cast("int"))
-        .withColumn("__rk", F.row_number().over(w))
-        .where(F.col("__rk") <= k)
-        .select("q_id", F.col(id_col), F.col("dist").alias("hamming"))
-    )
+        .withColumn("dist", F.expr("bit_count(code ^ q_code)").cast("int")),
+        "q_id", "dist", id_col, k,
+    ).select("q_id", F.col(id_col), F.col("dist").alias("hamming"))
 
 
 # ------------------------------------------------ int8 scalar quantization
@@ -317,13 +311,10 @@ def quantized_topk(
         lambda acc, x: acc + x,
     )
     cos = idot.cast("double") / (F.col("__nrm") * F.col("q_nrm"))
-    w = Window.partitionBy("q_id").orderBy(F.col("_cos").desc(), F.col(id_col))
-    return (
-        pairs.select("q_id", id_col, cos.alias("_cos"))
-        .withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= k)
-        .select("q_id", id_col, F.round("_cos", 6).alias("qcos"))
-    )
+    return _top_k(
+        pairs.select("q_id", id_col, cos.alias("_cos")),
+        "q_id", F.col("_cos").desc(), id_col, k,
+    ).select("q_id", id_col, F.round("_cos", 6).alias("qcos"))
 
 
 def embedding_dim_stats(
@@ -477,13 +468,10 @@ def pq_search_adc(
         f"CAST(0.0 AS DOUBLE), (a, b) -> a + b)"
     )
     cos = F.expr(adot) / (F.col("q_nrm") * F.sqrt(F.expr(anrm2)))
-    w = Window.partitionBy("q_id").orderBy(F.col("_c").desc(), F.col(id_col))
-    return (
-        pairs.select("q_id", id_col, cos.alias("_c"))
-        .withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= k)
-        .select("q_id", id_col, F.round("_c", 6).alias("approx_cos"))
-    )
+    return _top_k(
+        pairs.select("q_id", id_col, cos.alias("_c")),
+        "q_id", F.col("_c").desc(), id_col, k,
+    ).select("q_id", id_col, F.round("_c", 6).alias("approx_cos"))
 
 
 def _pq_sub_width(emb: DataFrame, m: int, vec_col: str) -> int:
@@ -545,10 +533,7 @@ def knn_graph(
     pairs = e.join(f, "__blk").where(F.col("src") != F.col("dst"))
     cos = F.round(_dot("__v", "__w") / (F.col("__n1") * F.col("__n2")), 6)
     scored = pairs.select("src", "dst", cos.alias("cos"))
-    w = Window.partitionBy("src").orderBy(F.col("cos").desc(), "dst")
-    topk = scored.withColumn("__rk", F.row_number().over(w)).where(
-        F.col("__rk") <= k
-    ).drop("__rk")
+    topk = _top_k(scored, "src", F.col("cos").desc(), "dst", k)
     a, b = topk.alias("a"), topk.alias("b")
     return (
         a.join(
@@ -589,20 +574,25 @@ def _int_l2(a: str | Column, b: str | Column) -> Column:
     )
 
 
-def _argmin_cid(
-    vec: str | Column, cents: list[tuple[int, list[int]]]
+def _lit_qc(qc: list[int]) -> Column:
+    """A centroid/codebook row as a long-array literal (shared by every
+    integer ANN path, so the cast convention cannot drift)."""
+    return F.array(*[F.lit(v).cast("long") for v in qc])
+
+
+def _arg_top_cids(
+    vec: str | Column,
+    cents: list[tuple[int, list[int]]],
+    n_assign: int,
 ) -> Column:
-    """Map-side nearest-centroid id over LITERAL centroids: an
-    ``aggregate`` fold computing the running (min dist, cid) via the
-    same ``_int_l2`` the probe/search paths use; strict ``<`` keeps the
-    FIRST minimum, and the array is cid-ascending, so ties go to the
-    smaller cid — the same total order as a (dist, cid) sort. The
-    accumulator is initialized from the FIRST centroid's real distance,
-    not a sentinel: a magic max-long would silently assign a
-    nonexistent cid 0 whenever every distance is NULL (NULL/short
-    vector), where first-centroid init degrades to cid 1 exactly like
-    the nulls-first window order it replaced. Evaluates k integer L2
-    folds per row inside whole-stage codegen; no join, no shuffle, no
+    """Map-side top-``n_assign`` nearest-centroid ids over LITERAL
+    centroids — the module's one nearest-centroid expression; element 0 of
+    ``n_assign=1`` is the argmin. Score every centroid as a (dist, cid)
+    struct, array_sort (struct order IS the (dist, cid)-ascending total
+    order, so ties go to the smaller cid), slice the head. A NULL or
+    short vector scores NULL against every centroid; NULL fields sort
+    first and tie, so it lands in the smallest cid (the first one in the
+    cid-ascending lists the trainers return). No join, no shuffle, no
     window.
 
     Sizing: the centroids ride INSIDE the plan as literals — right for
@@ -614,31 +604,130 @@ def _argmin_cid(
     if not cents:
         raise ValueError("no centroids (empty corpus?)")
     vec = F.col(vec) if isinstance(vec, str) else vec
-
-    def lit_qc(qc: list[int]) -> Column:
-        return F.array(*[F.lit(v).cast("long") for v in qc])
-
-    first_cid, first_qc = cents[0]
-    init = F.struct(
-        _int_l2(vec, lit_qc(first_qc)).alias("d"),
-        F.lit(first_cid).alias("cid"),
-    )
-    if len(cents) == 1:
-        return init["cid"]
-    rest = F.array(*[
-        F.struct(F.lit(cid).alias("cid"), lit_qc(qc).alias("qc"))
-        for cid, qc in cents[1:]
+    scored = F.array(*[
+        F.struct(_int_l2(vec, _lit_qc(qc)).alias("d"),
+                 F.lit(cid).alias("cid"))
+        for cid, qc in cents
     ])
+    return F.transform(
+        F.slice(F.array_sort(scored), 1, n_assign), lambda s: s["cid"]
+    )
 
-    def step(acc, c):
-        d = _int_l2(vec, c["qc"])
-        better = d < acc["d"]
-        return F.struct(
-            F.when(better, d).otherwise(acc["d"]).alias("d"),
-            F.when(better, c["cid"]).otherwise(acc["cid"]).alias("cid"),
+
+def _top_k(
+    df: DataFrame,
+    by: str,
+    dist: str | Column,
+    ident: str,
+    k: int,
+    dense: bool = False,
+) -> DataFrame:
+    """Each ``by`` group's first ``k`` rows in the total (``dist``,
+    ``ident``) order — the module's one per-group top-k, so the tie rule
+    (equal distance → smaller id) is written once. ``dist`` ascends
+    unless the caller passes a descending Column (cosine). ``dense``
+    ranks with dense_rank: rows equal in both keys (one pair reached
+    twice) share a rank and cannot eat slots; the caller dedups."""
+    rank = F.dense_rank() if dense else F.row_number()
+    w = Window.partitionBy(by).orderBy(dist, ident)
+    return (
+        df.withColumn("__rk", rank.over(w))
+        .where(F.col("__rk") <= k)
+        .drop("__rk")
+    )
+
+
+def _lloyd(
+    q: DataFrame,
+    id_col: str,
+    cols: list[str],
+    k: int,
+    n_iters: int,
+) -> tuple[list[DataFrame], list[list[tuple[int, list[int]]]]]:
+    """Lloyd's k-means in INTEGER arithmetic over the quantized block
+    columns ``cols`` of ``q``, every block in LOCKSTEP — the module's one
+    trainer loop: ``kmeans_integer`` is its one-block case,
+    ``build_pq_codebooks_integer`` its m-block case, and the by-residual
+    IVFPQ trainer runs it on the m residual slices.
+
+    Per block, piece by piece: the k seeds are the rows ordered by
+    ``md5(cast(id as string))`` (engine-identical pseudo-random order),
+    cid = 1..k in that order; assignment takes the minimum integer
+    squared L2 with ties to the smaller cid (``_arg_top_cids``); the
+    update is the per-dim truncating integer mean (``sum div count`` —
+    Spark ``div`` and DuckDB ``//`` both truncate toward zero); a
+    cluster left empty keeps its previous centroid. Every quantity is a
+    bigint, so no summation order or float rounding can diverge.
+
+    The blocks are independent but share every job boundary: the seed
+    rows are the same rows for every block (the order is a function of
+    the id alone) and the means are per-(block, cid, dim) groups. So
+    training is ONE seeds job + ONE means job per iteration over one
+    persisted frame, for any block count. Assignment is map-side over
+    the centroids as literals (driver metadata, k×dim longs): no join;
+    the only shuffle is the means aggregate, partially aggregated
+    map-side. Returns (per block the (id, qv, cid) assignments against
+    the centroids of the last iteration, per block the final centroids
+    [(cid, [dim longs])])."""
+    if n_iters < 1:
+        raise ValueError(
+            "n_iters must be >= 1 (there is no assignment against raw "
+            "seeds to return)"
         )
-
-    return F.aggregate(rest, init, step)["cid"]
+    q = _spread(q, min_bytes=FOLD_MIN_BYTES).persist()
+    try:
+        seeds = (
+            q.withColumn("__o", F.md5(F.col(id_col).cast("string")))
+            .orderBy("__o", id_col)
+            .limit(k)
+            .collect()
+        )
+        cents = [
+            [(i + 1, [int(v) for v in row[c]]) for i, row in enumerate(seeds)]
+            for c in cols
+        ]
+        for _ in range(n_iters):
+            used = cents
+            stacked = q.select(
+                F.explode(F.array(*[
+                    F.struct(
+                        F.lit(j).alias("b"),
+                        _arg_top_cids(c, used[j], 1)[0].alias("cid"),
+                        F.col(c).alias("qv"),
+                    )
+                    for j, c in enumerate(cols)
+                ])).alias("e")
+            ).select("e.b", "e.cid", F.posexplode("e.qv").alias("i0", "v"))
+            means = (
+                stacked.groupBy("b", "cid", F.expr("i0 + 1").alias("i"))
+                .agg(F.expr("sum(v) div count(*)").alias("val"))
+                .collect()
+            )
+            got: dict[tuple[int, int], dict[int, int]] = {}
+            for r in means:
+                got.setdefault((r["b"], r["cid"]), {})[r["i"]] = int(r["val"])
+            cents = [
+                [
+                    (
+                        cid,
+                        [d[i] for i in sorted(d)]
+                        if (d := got.get((j, cid))) is not None
+                        else prev,  # empty cluster keeps its centroid
+                    )
+                    for cid, prev in block
+                ]
+                for j, block in enumerate(used)
+            ]
+    finally:
+        q.unpersist()
+    assigned = [
+        q.select(
+            id_col, F.col(c).alias("qv"),
+            _arg_top_cids(c, used[j], 1)[0].alias("cid"),
+        )
+        for j, c in enumerate(cols)
+    ]
+    return assigned, cents
 
 
 def kmeans_integer(
@@ -653,72 +742,51 @@ def kmeans_integer(
     coarse quantizer. It is exactly SQL-replicable, so IVF TRAINING
     itself enters the correctness gate, not just its recall.
 
-    Determinism, piece by piece: vectors quantize under one global scale
-    (``quantize_global``); the k seeds are the corpus rows ordered by
-    ``md5(cast(id as string))`` (engine-identical pseudo-random order),
-    cid = 1..k in that order; assignment takes the minimum integer
-    squared L2 with ties to the smaller cid; the update is the per-dim
-    truncating integer mean (``sum div count`` — Spark ``div`` and
-    DuckDB ``//`` both truncate toward zero, verified); a cluster left
-    empty keeps its previous centroid. Every quantity is a bigint, so
-    no summation order or float rounding can diverge.
+    Vectors quantize under one global scale (``quantize_global``); the
+    training is the one-block case of the lockstep trainer ``_lloyd``,
+    which states the determinism rules (md5 seeding, ties to the smaller
+    cid, truncating means, empty-cluster carry). No dim probe runs.
 
     Distribution shape (the BPE posture): per iteration ONE Spark job —
-    assignment is a MAP-SIDE argmin over the centroids embedded as a
-    LITERAL array (they are driver metadata, k×dim longs): zero shuffle,
-    zero join — a window over an N×k crossJoin would shuffle N×k rows
-    per iteration, the kind of cost a 100 TB corpus cannot pay. The only
-    shuffle is the per-(cid, dim) mean (k×dim groups, map-side partial
-    aggregation). The k×dim new centroids collect as DRIVER METADATA
-    (the same contract as BPE merge rules — a few KB at any corpus
-    size). Returns (assignments DataFrame (id, cid), final centroids as
+    assignment is a MAP-SIDE nearest-centroid pick over the centroids
+    embedded as a LITERAL array (they are driver metadata, k×dim longs):
+    zero shuffle, zero join — a window over an N×k crossJoin would
+    shuffle N×k rows per iteration, the kind of cost a 100 TB corpus
+    cannot pay. The only shuffle is the per-(cid, dim) mean (k×dim
+    groups, map-side partial aggregation). The k×dim new centroids
+    collect as DRIVER METADATA (the same contract as BPE merge rules — a
+    few KB at any corpus size). Returns (assignments DataFrame (id, qv,
+    cid) against the last iteration's centroids, final centroids as
     [(cid, [dim longs])])."""
-    if n_iters < 1:
-        raise ValueError(
-            "n_iters must be >= 1 (there is no assignment against raw "
-            "seeds to return)"
-        )
-    q = _spread(emb.select(
-        F.col(id_col), quantize_global(vec_col, scale).alias("qv")
-    ), min_bytes=FOLD_MIN_BYTES).persist()
-    seeds = (
-        q.withColumn("__o", F.md5(F.col(id_col).cast("string")))
-        .orderBy("__o", id_col)
-        .limit(k)
-        .collect()
-    )
-    cents: list[tuple[int, list[int]]] = [
-        (i + 1, [int(v) for v in row["qv"]]) for i, row in enumerate(seeds)
-    ]
-    assigned = None
-    try:
-        for _ in range(n_iters):
-            assigned = q.select(
-                id_col, "qv", _argmin_cid("qv", cents).alias("cid")
-            )
-            means = (
-                assigned.select(
-                    "cid", F.posexplode("qv").alias("i0", "v")
-                )
-                .groupBy("cid", F.expr("i0 + 1").alias("i"))
-                .agg(F.expr("sum(v) div count(*)").alias("val"))
-                .collect()
-            )
-            by_cid: dict[int, dict[int, int]] = {}
-            for r in means:
-                by_cid.setdefault(r["cid"], {})[r["i"]] = int(r["val"])
-            cents = [
-                (
-                    cid,
-                    [d[i] for i in sorted(d)]
-                    if (d := by_cid.get(cid)) is not None
-                    else prev,  # empty cluster keeps its centroid
-                )
-                for cid, prev in cents
-            ]
-    finally:
-        q.unpersist()
+    q = emb.select(F.col(id_col), quantize_global(vec_col, scale).alias("qv"))
+    (assigned,), (cents,) = _lloyd(q, id_col, ["qv"], k, n_iters)
     return assigned, cents
+
+
+def _probe(
+    queries: DataFrame,
+    cents: list[tuple[int, list[int]]],
+    nprobe: int,
+    scale: int,
+    id_col: str,
+    vec_col: str,
+) -> DataFrame:
+    """Each query's ``nprobe`` nearest cells — the probe stage of every
+    IVF search: the quantized queries cross the broadcast k-row centroid
+    table, integer L2, ties to the smaller cid. Returns (q_id, __q_qv,
+    cid, qc) — nq × nprobe rows, broadcast-sized."""
+    cdf = queries.sparkSession.createDataFrame(
+        cents, "cid int, qc array<bigint>"
+    )
+    qs = queries.select(
+        F.col(id_col).alias("q_id"),
+        quantize_global(vec_col, scale).alias("__q_qv"),
+    )
+    return _top_k(
+        qs.crossJoin(F.broadcast(cdf))
+        .withColumn("__d", _int_l2("__q_qv", "qc")),
+        "q_id", "__d", "cid", nprobe,
+    ).drop("__d")
 
 
 def ivf_search_integer(
@@ -744,34 +812,18 @@ def ivf_search_integer(
     join hits the inverted lists on the cell key
     (partition pruning when the corpus is written partitioned by cell),
     candidate fraction ≈ nprobe/n_cells."""
-    spark = emb.sparkSession
     assigned, cents = kmeans_integer(
         emb, k=n_cells, n_iters=n_iters, scale=scale,
         id_col=id_col, vec_col=vec_col,
     )
-    cdf = spark.createDataFrame(cents, "cid int, qc array<bigint>")
-    qs = queries.select(
-        F.col(id_col).alias("q_id"),
-        quantize_global(vec_col, scale).alias("q_qv"),
-    )
-    pw = Window.partitionBy("q_id").orderBy("__d", "cid")
-    probes = (
-        qs.crossJoin(F.broadcast(cdf))
-        .withColumn("__d", _int_l2("q_qv", "qc"))
-        .withColumn("__rn", F.row_number().over(pw))
-        .where(F.col("__rn") <= nprobe)
-        .select("q_id", "q_qv", "cid")
-    )
-    cand = assigned.join(F.broadcast(probes), "cid").where(
-        F.col(id_col) != F.col("q_id")
-    )
-    kw = Window.partitionBy("q_id").orderBy("__d", id_col)
-    return (
-        cand.withColumn("__d", _int_l2("qv", "q_qv"))
-        .withColumn("__rn", F.row_number().over(kw))
-        .where(F.col("__rn") <= k)
-        .select("q_id", F.col(id_col), F.col("__d").alias("dist_sq"))
-    )
+    probes = _probe(queries, cents, nprobe, scale, id_col, vec_col)
+    cand = assigned.join(
+        F.broadcast(probes.select("q_id", "__q_qv", "cid")), "cid"
+    ).where(F.col(id_col) != F.col("q_id"))
+    return _top_k(
+        cand.withColumn("__d", _int_l2("qv", "__q_qv")),
+        "q_id", "__d", id_col, k,
+    ).select("q_id", F.col(id_col), F.col("__d").alias("dist_sq"))
 
 
 def build_pq_codebooks_integer(
@@ -783,116 +835,37 @@ def build_pq_codebooks_integer(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> list[tuple[int, DataFrame, list[tuple[int, list[int]]]]]:
-    """ORACLE-EXACT PQ codebook training: one ``kmeans_integer`` per
-    subvector block — the library's one PQ trainer, so PQ TRAINING
-    itself is value-hash-checkable — every subspace inherits the
-    integer trainer's determinism (global quantization, md5 seeding,
-    tie-breaks, truncating means, empty-cluster carry). Subvector
-    slicing happens BEFORE quantization, so each block trains on
-    exactly the bytes its ADC distance table will see.
+    """ORACLE-EXACT PQ codebook training: integer k-means per subvector
+    block — the m-block case of the lockstep trainer ``_lloyd``, and the
+    library's one PQ trainer, so PQ TRAINING itself is
+    value-hash-checkable — every subspace inherits the integer trainer's
+    determinism (global quantization, md5 seeding, tie-breaks,
+    truncating means, empty-cluster carry). Subvector slicing happens
+    BEFORE quantization, so each block trains on exactly the bytes its
+    ADC distance table will see.
 
-    Returns [(subspace, assignments df (id, code cid), centroids)] —
-    per-block; the centroids are driver metadata (m × k × dim/m longs),
-    the same contract as the full-vector trainer.
+    Returns [(subspace, assignments df (id, qv, code cid), centroids)]
+    — per-block; the centroids are driver metadata (m × k × dim/m
+    longs), the same contract as the full-vector trainer.
 
-    LOCKSTEP TRAINING (r15): the m per-block Lloyd's runs are
-    independent but share every job boundary — the md5-ordered seed
-    rows are the SAME corpus rows for every block (the order is a
-    function of the id alone), and each iteration's truncating means
-    are per-(block, code, dim) groups — so all m blocks train in ONE
-    seeds job + ONE means job per iteration over a single persisted
-    frame carrying every block's quantized slice, instead of m
-    sequential ``kmeans_integer`` calls (m×(1+n_iters) barrier jobs →
-    1+n_iters; measured r15: q308's trainer segment was 12 of its 27
-    jobs). The arithmetic is the per-block trainer's, bit for bit:
-    same seeds, same argmin tie rule, same ``sum div count`` means,
-    same empty-cluster carry — q301/q307/q308's oracles (the unrolled
-    per-block CTE chains) gate the equality."""
-    if n_iters < 1:
-        raise ValueError(
-            "n_iters must be >= 1 (there is no assignment against raw "
-            "seeds to return)"
-        )
+    LOCKSTEP TRAINING (r15): all m blocks train in ONE seeds job + ONE
+    means job per iteration over a single persisted frame carrying every
+    block's quantized slice, instead of m sequential one-block runs
+    (m×(1+n_iters) barrier jobs → 1+n_iters; measured r15: q308's
+    trainer segment was 12 of its 27 jobs). The arithmetic is the
+    one-block trainer's, bit for bit — q301/q307/q308's oracles (the
+    unrolled per-block CTE chains) gate the equality."""
     sub = _pq_sub_width(emb, m, vec_col)
-    q = _spread(emb.select(
-        F.col(id_col),
-        *[
+    cols = [f"__qv{j}" for j in range(m)]
+    assigned, cents = _lloyd(
+        emb.select(F.col(id_col), *[
             quantize_global(_pq_block_slice(vec_col, j, sub), scale)
-            .alias(f"__qv{j}")
-            for j in range(m)
-        ],
-    ), min_bytes=FOLD_MIN_BYTES).persist()
-    try:
-        seeds = (
-            q.withColumn("__o", F.md5(F.col(id_col).cast("string")))
-            .orderBy("__o", id_col)
-            .limit(n_codes)
-            .collect()
-        )
-        cents: dict[int, list[tuple[int, list[int]]]] = {
-            j: [
-                (i + 1, [int(v) for v in row[f"__qv{j}"]])
-                for i, row in enumerate(seeds)
-            ]
-            for j in range(m)
-        }
-        for _ in range(n_iters):
-            last_assign_cents = dict(cents)
-            stacked = q.select(
-                F.explode(F.array(*[
-                    F.struct(
-                        F.lit(j).alias("b"),
-                        _argmin_cid(f"__qv{j}", cents[j]).alias("cid"),
-                        F.col(f"__qv{j}").alias("qv"),
-                    )
-                    for j in range(m)
-                ])).alias("e")
-            ).select("e.b", "e.cid", F.posexplode("e.qv").alias("i0", "v"))
-            means = (
-                stacked.groupBy("b", "cid", F.expr("i0 + 1").alias("i"))
-                .agg(F.expr("sum(v) div count(*)").alias("val"))
-                .collect()
-            )
-            by_block: dict[int, dict[int, dict[int, int]]] = {}
-            for r in means:
-                by_block.setdefault(r["b"], {}).setdefault(
-                    r["cid"], {}
-                )[r["i"]] = int(r["val"])
-            cents = {
-                j: [
-                    (
-                        cid,
-                        [d[i] for i in sorted(d)]
-                        if (d := by_block.get(j, {}).get(cid)) is not None
-                        else prev,  # empty cluster keeps its centroid
-                    )
-                    for cid, prev in cents[j]
-                ]
-                for j in range(m)
-            }
-    finally:
-        q.unpersist()
-    return [
-        (
-            j,
-            emb.select(
-                F.col(id_col),
-                quantize_global(_pq_block_slice(vec_col, j, sub), scale)
-                .alias("qv"),
-            ).select(
-                id_col, "qv",
-                _argmin_cid("qv", last_assign_cents[j]).alias("cid"),
-            ),
-            cents[j],
-        )
-        for j in range(m)
-    ]
-
-
-def _lit_qc(qc: list[int]) -> Column:
-    """A centroid/codebook row as a long-array literal (shared by every
-    integer ANN path, so the cast convention cannot drift)."""
-    return F.array(*[F.lit(v).cast("long") for v in qc])
+            .alias(c)
+            for j, c in enumerate(cols)
+        ]),
+        id_col, cols, n_codes, n_iters,
+    )
+    return [(j, assigned[j], cents[j]) for j in range(m)]
 
 
 def _pq_code_cols(
@@ -909,7 +882,7 @@ def _pq_code_cols(
         sl = _pq_block_slice(vec_col, j, sub)
         if requantize:
             sl = quantize_global(sl, scale)
-        out.append(_argmin_cid(sl, cb).alias(f"__code{j}"))
+        out.append(_arg_top_cids(sl, cb, 1)[0].alias(f"__code{j}"))
     return out
 
 
@@ -947,12 +920,9 @@ def _adc_topk(cand: DataFrame, m: int, k: int, id_col: str) -> DataFrame:
             for j in range(m)
         ],
     )
-    w = Window.partitionBy("q_id").orderBy("adist", id_col)
-    return (
-        cand.select("q_id", id_col, adist.alias("adist"))
-        .withColumn("__rn", F.row_number().over(w))
-        .where(F.col("__rn") <= k)
-        .select("q_id", F.col(id_col), F.col("adist"))
+    return _top_k(
+        cand.select("q_id", id_col, adist.alias("adist")),
+        "q_id", "adist", id_col, k,
     )
 
 
@@ -969,7 +939,7 @@ def pq_search_adc_integer(
 ) -> DataFrame:
     """END-TO-END oracle-exact PQ search: train per-block integer
     codebooks (``build_pq_codebooks_integer``), ENCODE the corpus
-    against the FINAL codebooks (m map-side ``_argmin_cid`` folds per
+    against the FINAL codebooks (m map-side nearest-code picks per
     row — one pass, zero shuffle, zero join, ties to the smaller code),
     build each query's asymmetric-distance tables (m × n_codes integer
     L2 entries — driver-free, computed in one projection over the
@@ -1081,25 +1051,13 @@ def ivfpq_search_integer(
     )
     codes = qemb.select(
         id_col,
-        _argmin_cid("__qv", cents).alias("cid"),
+        _arg_top_cids("__qv", cents, 1)[0].alias("cid"),
         *_pq_code_cols("__qv", cbs, sub),
     )
-    spark = emb.sparkSession
-    cdf = spark.createDataFrame(cents, "cid int, qc array<bigint>")
-    qs = queries.select(
-        F.col(id_col).alias("q_id"),
-        quantize_global(vec_col, scale).alias("__q_qv"),
+    # nprobe rows per query, tables attached
+    pq = _probe(queries, cents, nprobe, scale, id_col, vec_col).select(
+        "q_id", "cid", *_pq_dt_cols("__q_qv", cbs, sub)
     )
-    pw = Window.partitionBy("q_id").orderBy("__d", "cid")
-    probes = (
-        qs.crossJoin(F.broadcast(cdf))
-        .withColumn("__d", _int_l2("__q_qv", "qc"))
-        .withColumn("__rn", F.row_number().over(pw))
-        .where(F.col("__rn") <= nprobe)
-        .select("q_id", "cid")
-    )
-    qdt = qs.select("q_id", *_pq_dt_cols("__q_qv", cbs, sub))
-    pq = probes.join(qdt, "q_id")  # nprobe rows per query, tables attached
     cand = codes.join(F.broadcast(pq), "cid").where(
         F.col(id_col) != F.col("q_id")
     )
@@ -1122,16 +1080,18 @@ def ivfpq_residual_search_integer(
 ) -> DataFrame:
     """BY-RESIDUAL IVF+PQ, oracle-exact — the default FAISS IVFPQ
     architecture: every vector is assigned to its nearest coarse cell
-    (FINAL centroids, fresh map-side argmin — the index's contract, not
-    the trainer's last-iteration snapshot), PQ codebooks are trained on
-    the RESIDUALS r = qv − centroid[cell] (residuals are centered and
-    small, which is why residual PQ quantizes better than raw PQ), and
-    a query's ADC tables are PER PROBED CELL (its residual differs in
-    every cell). Residuals are integer differences of integer vectors;
-    the per-block trainer re-quantizes them (×scale, exact for integer
-    inputs), so training, residual computation, encode, per-cell
-    tables, and search all stay bigint — one SQL hash gate for the
-    complete production ANN stack.
+    (FINAL centroids, fresh map-side nearest-cell pick — the index's
+    contract, not the trainer's last-iteration snapshot), PQ codebooks
+    are trained on the RESIDUALS r = qv − centroid[cell] (residuals are
+    centered and small, which is why residual PQ quantizes better than
+    raw PQ), and a query's ADC tables are PER PROBED CELL (its residual
+    differs in every cell). Residuals are integer differences of integer
+    vectors; the trainer re-quantizes each residual slice (×scale, exact
+    for integer inputs) and trains all m blocks in lockstep (``_lloyd``
+    — the same codebooks as one ``kmeans_integer`` per slice), so
+    training, residual computation, encode, per-cell tables, and search
+    all stay bigint — one SQL hash gate for the complete production ANN
+    stack.
 
     Scale posture: ``ivfpq_search_integer``'s, plus the residual step —
     one broadcast join against the k-row centroid table on the corpus
@@ -1148,64 +1108,43 @@ def ivfpq_residual_search_integer(
     qv = emb.select(
         F.col(id_col), quantize_global(vec_col, scale).alias("__qv")
     )
-    # index-side assignment against the FINAL centroids + residuals —
-    # persisted across the m per-block trainings (each would otherwise
-    # re-derive the corpus-wide quantize + argmin + centroid join)
+    # index-side assignment against the FINAL centroids + residuals
     resid = (
-        qv.withColumn("cid", _argmin_cid("__qv", cents))
+        qv.withColumn("cid", _arg_top_cids("__qv", cents, 1)[0])
         .join(F.broadcast(cdf), "cid")
         .select(
             id_col, "cid",
             F.zip_with("__qv", "qc", lambda a, b: a - b).alias("__r"),
         )
-        .persist()
     )
-    try:
-        blocks = [
-            kmeans_integer(
-                resid.select(
-                    F.col(id_col),
-                    _pq_block_slice("__r", j, sub).alias("__r"),
-                ),
-                k=n_codes, n_iters=pq_iters, scale=scale,
-                id_col=id_col, vec_col="__r",
-            )[1]
-            for j in range(m)
-        ]
-        codes = resid.select(
-            id_col, "cid",
-            *_pq_code_cols("__r", blocks, sub, requantize=True, scale=scale),
+    cols = [f"__r{j}" for j in range(m)]
+    _, blocks = _lloyd(
+        resid.select(F.col(id_col), *[
+            quantize_global(_pq_block_slice("__r", j, sub), scale).alias(c)
+            for j, c in enumerate(cols)
+        ]),
+        id_col, cols, n_codes, pq_iters,
+    )
+    codes = resid.select(
+        id_col, "cid",
+        *_pq_code_cols("__r", blocks, sub, requantize=True, scale=scale),
+    )
+    # per probed cell: the query residual and its m ADC tables
+    pq = (
+        _probe(queries, cents, nprobe, scale, id_col, vec_col)
+        .select(
+            "q_id", "cid",
+            F.zip_with("__q_qv", "qc", lambda a, b: a - b).alias("__rq"),
         )
-        qs = queries.select(
-            F.col(id_col).alias("q_id"),
-            quantize_global(vec_col, scale).alias("__q_qv"),
+        .select(
+            "q_id", "cid",
+            *_pq_dt_cols("__rq", blocks, sub, requantize=True, scale=scale),
         )
-        pw = Window.partitionBy("q_id").orderBy("__d", "cid")
-        # per probed cell: the query residual and its m ADC tables
-        pq = (
-            qs.crossJoin(F.broadcast(cdf))
-            .withColumn("__d", _int_l2("__q_qv", "qc"))
-            .withColumn("__rn", F.row_number().over(pw))
-            .where(F.col("__rn") <= nprobe)
-            .select(
-                "q_id", "cid",
-                F.zip_with("__q_qv", "qc", lambda a, b: a - b).alias("__rq"),
-            )
-            .select(
-                "q_id", "cid",
-                *_pq_dt_cols("__rq", blocks, sub, requantize=True, scale=scale),
-            )
-        )
-        cand = codes.join(F.broadcast(pq), "cid").where(
-            F.col(id_col) != F.col("q_id")
-        )
-        return _adc_topk(cand, m, k, id_col)
-    finally:
-        # training is eager (collects inside kmeans_integer), so the
-        # cache has served its purpose; the returned lazy plan simply
-        # re-derives resid once at execution (kmeans_integer's own
-        # q-persist convention)
-        resid.unpersist()
+    )
+    cand = codes.join(F.broadcast(pq), "cid").where(
+        F.col(id_col) != F.col("q_id")
+    )
+    return _adc_topk(cand, m, k, id_col)
 
 
 def ivfpq_refine_search_integer(
@@ -1293,12 +1232,7 @@ def exact_rerank_integer(
             _int_l2("__qv", "__q_qv").alias("edist"),
         )
     )
-    w = Window.partitionBy("q_id").orderBy("edist", id_col)
-    return (
-        scored.withColumn("__rn", F.row_number().over(w))
-        .where(F.col("__rn") <= k)
-        .select("q_id", F.col(id_col), F.col("edist"))
-    )
+    return _top_k(scored, "q_id", "edist", id_col, k)
 
 
 def sq8_train_integer(
@@ -1411,17 +1345,9 @@ def sq8_search_integer(
                     lambda x: x * 255).alias("__q255"),
     )
     pairs = corpus.join(F.broadcast(qs), F.col(id_col) != F.col("q_id"))
-    sdist = F.aggregate(
-        F.zip_with("__q255", "__rv", lambda a, b: (a - b) * (a - b)),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-    w = Window.partitionBy("q_id").orderBy("sdist", id_col)
-    return (
-        pairs.select("q_id", id_col, sdist.alias("sdist"))
-        .withColumn("__rn", F.row_number().over(w))
-        .where(F.col("__rn") <= k)
-        .select("q_id", F.col(id_col), F.col("sdist"))
+    return _top_k(
+        pairs.select("q_id", id_col, _int_l2("__q255", "__rv").alias("sdist")),
+        "q_id", "sdist", id_col, k,
     )
 
 
@@ -1482,40 +1408,20 @@ def ivfsq_search_integer(
     recon = _sq8_recon_col(vec_col, vmin, vmax, scale)
     corpus = emb.select(
         F.col(id_col),
-        _argmin_cid(quantize_global(vec_col, scale), cents).alias("cid"),
+        _arg_top_cids(quantize_global(vec_col, scale), cents, 1)[0]
+        .alias("cid"),
         recon.alias("__rv"),
     )
-    spark = emb.sparkSession
-    cdf = spark.createDataFrame(cents, "cid int, qc array<bigint>")
-    qs = queries.select(
-        F.col(id_col).alias("q_id"),
-        quantize_global(vec_col, scale).alias("__q_qv"),
-    )
-    pw = Window.partitionBy("q_id").orderBy("__d", "cid")
-    probes = (
-        qs.crossJoin(F.broadcast(cdf))
-        .withColumn("__d", _int_l2("__q_qv", "qc"))
-        .withColumn("__rn", F.row_number().over(pw))
-        .where(F.col("__rn") <= nprobe)
-        .select(
-            "q_id", "cid",
-            F.transform("__q_qv", lambda x: x * 255).alias("__q255"),
-        )
+    probes = _probe(queries, cents, nprobe, scale, id_col, vec_col).select(
+        "q_id", "cid",
+        F.transform("__q_qv", lambda x: x * 255).alias("__q255"),
     )
     cand = corpus.join(F.broadcast(probes), "cid").where(
         F.col(id_col) != F.col("q_id")
     )
-    sdist = F.aggregate(
-        F.zip_with("__q255", "__rv", lambda a, b: (a - b) * (a - b)),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-    w = Window.partitionBy("q_id").orderBy("sdist", id_col)
-    return (
-        cand.select("q_id", id_col, sdist.alias("sdist"))
-        .withColumn("__rn", F.row_number().over(w))
-        .where(F.col("__rn") <= k)
-        .select("q_id", F.col(id_col), F.col("sdist"))
+    return _top_k(
+        cand.select("q_id", id_col, _int_l2("__q255", "__rv").alias("sdist")),
+        "q_id", "sdist", id_col, k,
     )
 
 
@@ -1788,19 +1694,11 @@ def ivf_search_partitioned(
             "partitioned serving needs trained coarse centroids — pass "
             "coarse= or index= (load_ann_index output with 'coarse')"
         )
-    cdf = spark.createDataFrame(coarse, "cid int, qc array<bigint>")
-    qs = queries.select(
-        F.col(id_col).alias("q_id"),
-        quantize_global(vec_col, scale).alias("q_qv"),
-    )
-    pw = Window.partitionBy("q_id").orderBy("__d", "cid")
     probes = (
-        qs.crossJoin(F.broadcast(cdf))
-        .withColumn("__d", _int_l2("q_qv", "qc"))
-        .withColumn("__rn", F.row_number().over(pw))
-        .where(F.col("__rn") <= nprobe)
-        .select("q_id", "q_qv", "cid")
-    ).persist()
+        _probe(queries, coarse, nprobe, scale, id_col, vec_col)
+        .select("q_id", "__q_qv", "cid")
+        .persist()
+    )
     try:
         cells = sorted(
             r["cid"] for r in probes.select("cid").distinct().collect()
@@ -1813,13 +1711,10 @@ def ivf_search_partitioned(
         cand = corpus.join(F.broadcast(probes), "cid").where(
             F.col(id_col) != F.col("q_id")
         )
-        kw = Window.partitionBy("q_id").orderBy("__d", id_col)
-        out = (
-            cand.withColumn("__d", _int_l2("qv", "q_qv"))
-            .withColumn("__rn", F.row_number().over(kw))
-            .where(F.col("__rn") <= k)
-            .select("q_id", F.col(id_col), F.col("__d").alias("dist_sq"))
-        )
+        out = _top_k(
+            cand.withColumn("__d", _int_l2("qv", "__q_qv")),
+            "q_id", "__d", id_col, k,
+        ).select("q_id", F.col(id_col), F.col("__d").alias("dist_sq"))
         # materialize before releasing the probe cache (it feeds the
         # broadcast twice: the cell collect above and the candidate join)
         out = out.localCheckpoint(eager=True)
@@ -1836,28 +1731,6 @@ def ivf_search_partitioned(
 # integer L2 with (dist, id) tie-breaks, so build AND search are one SQL
 # hash gate — the property the float/heap-based reference
 # implementations cannot offer.
-
-
-def _arg_top_cids(
-    vec: str | Column,
-    cents: list[tuple[int, list[int]]],
-    n_assign: int,
-) -> Column:
-    """Map-side top-``n_assign`` nearest-centroid ids over LITERAL
-    centroids: score every centroid as a (dist, cid) struct, array_sort
-    (struct order IS the (dist, cid)-ascending total order — same tie
-    rule as ``_argmin_cid``), slice the head. Whole-stage codegen; no
-    join, no shuffle, no window. ``_argmin_cid``'s k-sizing note
-    applies."""
-    vec = F.col(vec) if isinstance(vec, str) else vec
-    scored = F.array(*[
-        F.struct(_int_l2(vec, _lit_qc(qc)).alias("d"),
-                 F.lit(cid).alias("cid"))
-        for cid, qc in cents
-    ])
-    return F.transform(
-        F.slice(F.array_sort(scored), 1, n_assign), lambda s: s["cid"]
-    )
 
 
 def nsw_graph_integer(
@@ -1885,8 +1758,9 @@ def nsw_graph_integer(
 
     Scale posture: the pair stage is blocked geometry — Σ(n_assign·
     |cell|)² pairs, never N² — with the cells trained by
-    ``kmeans_integer`` (map-side argmin assignment, centroids as
-    literals); one top-r window per source node; bridges are
+    ``kmeans_integer`` and assigned map-side by ``_arg_top_cids``
+    (centroids as literals); one top-r window per source node
+    (``_pair_top_r``); bridges are
     2·(n_cells−1) rows from a groupBy + a broadcast 1-row hub. Degree
     is r+O(1), so the edge set is ~r·N rows."""
     cents = (
@@ -1967,21 +1841,13 @@ def _nsw_local_edges(
         F.col("__v").alias("__w"),
         "__cid",
     )
-    # PAIR-STAGE PLAN (the build's hot loop — measured at sf0.1):
-    # (a) the per-pair distance is the UNROLLED dim-term sum, not the
-    #     aggregate/zip_with fold — higher-order functions allocate the
-    #     zipped array per pair and stay outside whole-stage codegen
-    #     (15.7 s vs 2.9 s over the same 2M pairs, identical sums);
-    # (b) the cell key has only n_cells distinct values and the pre-join
-    #     shuffle is bytes-tiny, so AQE coalesces it to ONE task and the
-    #     whole quadratic projection serializes — salt the key
-    #     (operators/skew.py's recipe) and repartition BOTH sides by
-    #     (cell, salt) with an EXPLICIT partition count (user-specified
-    #     shuffles are exempt from AQE coalescing), so the distance
-    #     stage runs wide at any input size.
-    # dim comes from the trained centroids (each IS a quantized corpus
-    # vector), so no extra first() job probes the corpus per build
-    dim = len(cents[0][1])
+    # PAIR-STAGE PLAN (the build's hot loop — measured at sf0.1): the
+    # cell key has only n_cells distinct values and the pre-join shuffle
+    # is bytes-tiny, so AQE coalesces it to ONE task and the whole
+    # quadratic projection serializes — salt the key (operators/skew.py's
+    # recipe) and repartition BOTH sides by (cell, salt) with an EXPLICIT
+    # partition count (user-specified shuffles are exempt from AQE
+    # coalescing), so the distance stage runs wide at any input size.
     n_salts = 16
     p = max(n_salts * 4,
             base.sparkSession.sparkContext.defaultParallelism * 2)
@@ -1992,25 +1858,34 @@ def _nsw_local_edges(
         "__salt", F.explode(F.sequence(F.lit(0), F.lit(n_salts - 1)))
     ).withColumn("__salt", F.col("__salt").cast("int")) \
         .repartition(p, "__cid", "__salt")
-    d_unrolled = F.expr(
-        " + ".join(
-            f"(__v[{i}] - __w[{i}]) * (__v[{i}] - __w[{i}])"
-            for i in range(dim)
-        )
-    ).cast("long")
-    pairs = (
-        la.join(lb, ["__cid", "__salt"])
-        .where(F.col("src") != F.col("dst"))
-        .select("src", "dst", d_unrolled.alias("__d"))
+    pairs = la.join(lb, ["__cid", "__salt"]).where(
+        F.col("src") != F.col("dst")
     )
-    # a pair sharing BOTH cells appears twice with an IDENTICAL (d, dst):
-    # dense_rank gives duplicates one rank (they cannot eat top-r slots),
-    # so the corpus-sized dedup shuffle collapses to a dedup over the
-    # <= 2·r·N survivors
-    w = Window.partitionBy("src").orderBy("__d", "dst")
+    return _pair_top_r(pairs, cents, r)
+
+
+def _pair_top_r(
+    pairs: DataFrame, cents: list[tuple[int, list[int]]], r: int
+) -> DataFrame:
+    """Each src's top-``r`` distinct dsts by integer L2 over (src, __v,
+    dst, __w) candidate pairs — the NSW pair stage of the build, the
+    insert and the delete. The distance is the UNROLLED dim-term sum, not
+    the aggregate/zip_with fold: higher-order functions allocate the
+    zipped array per pair and stay outside whole-stage codegen (15.7 s
+    vs 2.9 s over the same 2M pairs at sf0.1, identical sums). dim comes
+    from the trained centroids (each IS a quantized corpus vector), so
+    no first() job probes the corpus. A pair sharing BOTH cells appears
+    twice with an IDENTICAL (d, dst): dense_rank gives the copies one
+    rank (they cannot eat top-r slots), so the dedup runs over the
+    <= 2·r·N survivors, not the corpus-sized pair set. Returns (src,
+    dst)."""
+    d = F.expr(" + ".join(
+        f"(__v[{i}] - __w[{i}]) * (__v[{i}] - __w[{i}])"
+        for i in range(len(cents[0][1]))
+    )).cast("long")
     return (
-        pairs.withColumn("__rk", F.dense_rank().over(w))
-        .where(F.col("__rk") <= r)
+        _top_k(pairs.select("src", "dst", d.alias("__d")),
+               "src", "__d", "dst", r, dense=True)
         .select("src", "dst")
         .dropDuplicates(["src", "dst"])
     )
@@ -2137,7 +2012,6 @@ def beam_search_integer(
                 _int_l2("__q_qv", "__nv").alias("dist"),
             )
         )
-    bw = Window.partitionBy("q_id").orderBy("dist", "node")
     for _ in range(hops):
         # candidates = adj ⨝ beam = beam ∪ neighbors(beam) via the
         # self-loops (see docstring); dist is a pure function of
@@ -2161,19 +2035,13 @@ def beam_search_integer(
                 _int_l2("__q_qv", "__dv").alias("dist"),
             )
         )
-        bm = (
-            cand.withColumn("__rk", F.dense_rank().over(bw))
-            .where(F.col("__rk") <= beam)
-            .drop("__rk")
-            .dropDuplicates(["q_id", "node"])
-        )
+        bm = _top_k(
+            cand, "q_id", "dist", "node", beam, dense=True
+        ).dropDuplicates(["q_id", "node"])
     if exclude_self:
         bm = bm.where(F.col("node") != F.col("q_id"))
-    return (
-        bm.withColumn("__rk", F.row_number().over(bw))
-        .where(F.col("__rk") <= k)
-        .select("q_id", F.col("node").alias(id_col),
-                F.col("dist").alias("dist_sq"))
+    return _top_k(bm, "q_id", "dist", "node", k).select(
+        "q_id", F.col("node").alias(id_col), F.col("dist").alias("dist_sq")
     )
 
 
@@ -2259,14 +2127,11 @@ def exact_knn_integer(
         F.col(id_col).alias("q_id"),
         quantize_global(vec_col, scale).alias("__q_qv"),
     )
-    w = Window.partitionBy("q_id").orderBy("__d", id_col)
-    return (
+    return _top_k(
         corpus.join(F.broadcast(qs), F.col(id_col) != F.col("q_id"))
-        .withColumn("__d", _int_l2("__cv", "__q_qv"))
-        .withColumn("__rk", F.row_number().over(w))
-        .where(F.col("__rk") <= k)
-        .select("q_id", F.col(id_col), F.col("__d").alias("dist_sq"))
-    )
+        .withColumn("__d", _int_l2("__cv", "__q_qv")),
+        "q_id", "__d", id_col, k,
+    ).select("q_id", F.col(id_col), F.col("__d").alias("dist_sq"))
 
 
 def build_nsw_corpus(
@@ -2575,13 +2440,14 @@ def hamming_refine_partitioned(
         quantize_global(vec_col, scale).alias("q_qv"),
     ).localCheckpoint(eager=True)
     codes = spark.read.parquet(path).select(id_col, "code")
-    hw = Window.partitionBy("q_id").orderBy("dist", id_col)
     short = (
-        codes.join(F.broadcast(qs.select("q_id", "q_code")),
-                   F.col(id_col) != F.col("q_id"))
-        .withColumn("dist", F.expr("bit_count(code ^ q_code)").cast("int"))
-        .withColumn("__rk", F.row_number().over(hw))
-        .where(F.col("__rk") <= shortlist)
+        _top_k(
+            codes.join(F.broadcast(qs.select("q_id", "q_code")),
+                       F.col(id_col) != F.col("q_id"))
+            .withColumn("dist",
+                        F.expr("bit_count(code ^ q_code)").cast("int")),
+            "q_id", "dist", id_col, shortlist,
+        )
         .select("q_id", id_col)
         .localCheckpoint(eager=True)  # nq × shortlist rows; read twice
     )
@@ -2593,15 +2459,12 @@ def hamming_refine_partitioned(
         .where(F.col(id_col).isin([int(i) for i in ids]))  # row-group skip
         .select(id_col, "qv")
     )
-    kw = Window.partitionBy("q_id").orderBy("edist", id_col)
-    out = (
+    out = _top_k(
         cand.join(F.broadcast(short), id_col)
         .join(F.broadcast(qs.select("q_id", "q_qv")), "q_id")
-        .withColumn("edist", _int_l2("qv", "q_qv"))
-        .withColumn("__rk", F.row_number().over(kw))
-        .where(F.col("__rk") <= k)
-        .select("q_id", F.col(id_col), F.col("edist"))
-    )
+        .withColumn("edist", _int_l2("qv", "q_qv")),
+        "q_id", "edist", id_col, k,
+    ).select("q_id", F.col(id_col), F.col("edist"))
     return out.localCheckpoint(eager=True)
 
 
@@ -2718,37 +2581,58 @@ def nsw_insert_integer(
     At 100 TB the production write-back is dynamic partition overwrite
     of the touched cell directories + append of the delta's; here the
     merged frame is returned for the gate to walk."""
-    dim = len(cents[0][1])
+    d, touched = _nsw_assign_batch(
+        delta, cents, n_assign, scale, id_col, vec_col
+    )
+    if not touched:  # empty delta: the standing index IS the merge
+        return nsw_layout_edges(spark, path)
+    new_edges, reps = _nsw_insert_new_edges(spark, path, cents, d, touched, r)
+    return _nsw_merged(spark, path, touched, new_edges, reps)
+
+
+def _nsw_assign_batch(
+    batch: DataFrame,
+    cents: list[tuple[int, list[int]]],
+    n_assign: int,
+    scale: int,
+    id_col: str,
+    vec_col: str,
+) -> tuple[DataFrame, list[int]]:
+    """An insert or tombstone batch assigned against the layout's FIXED
+    centroids: (node, qv, cells), checkpointed once — batch-sized, and
+    every maintenance step reads it several times — plus its touched
+    cell ids, ≤ n_cells driver literals (the static PartitionFilters of
+    every layout read)."""
     d = (
-        delta.select(
+        batch.select(
             F.col(id_col).alias("node"),
             quantize_global(vec_col, scale).alias("qv"),
         )
         .withColumn("cells", _arg_top_cids("qv", cents, n_assign))
-        .localCheckpoint(eager=True)  # batch-sized; referenced 4×
+        .localCheckpoint(eager=True)
     )
     touched = sorted(
         r0["c"] for r0 in
         d.select(F.explode("cells").alias("c")).distinct().collect()
     )
-    if not touched:  # empty delta: the standing index IS the merge
-        return nsw_layout_edges(spark, path)
-    new_edges, reps = _nsw_insert_new_edges(
-        spark, path, cents, d, touched, r=r, n_assign=n_assign,
-    )
-    # unaffected remainder: canonical copies whose src shares NO touched
-    # cell — a column filter on the carried cells array, no join
+    return d, touched
+
+
+def _nsw_merged(
+    spark, path: str, touched: list[int], edges: DataFrame, reps: DataFrame
+) -> DataFrame:
+    """The merged graph of an insert or delete: the unaffected remainder
+    — canonical copies whose src shares NO touched cell, a column filter
+    on the carried ``cells`` array (no join, no corpus access) — plus the
+    re-ranked ``edges`` and the bridges of the merged ``reps``."""
     untouched = ~F.arrays_overlap(
         F.col("cells"), F.array(*[F.lit(int(c)) for c in touched])
     )
-    unaffected = (
+    return (
         spark.read.parquet(f"{path}/edges")
         .where((F.col("pos") == 0) & untouched)
         .select("src", "dst")
-    )
-    return (
-        unaffected
-        .unionByName(new_edges)
+        .unionByName(edges)
         .unionByName(_nsw_bridges(reps))
     )
 
@@ -2773,7 +2657,6 @@ def _nsw_insert_new_edges(
     d: DataFrame,
     touched: list[int],
     r: int,
-    n_assign: int,
 ) -> tuple[DataFrame, DataFrame]:
     """The insert's re-rank core, shared by the gate path
     (``nsw_insert_integer``) and the write-back path
@@ -2783,29 +2666,11 @@ def _nsw_insert_new_edges(
     top-r sets of every DELTA src and every AFFECTED standing src, and
     ``merged_reps`` is the post-insert (__c1, rep) table. Only the
     touched cells' partitions of the standing layout are read."""
-    dim = len(cents[0][1])
     dx = d.select("node", "qv", F.explode("cells").alias("cell"))
     bnodes = (
         spark.read.parquet(f"{path}/nodes")
         .where(F.col("cell").isin(touched))  # static partition pruning
     )
-    d_unrolled = F.expr(
-        " + ".join(
-            f"(__v[{i}] - __w[{i}]) * (__v[{i}] - __w[{i}])"
-            for i in range(dim)
-        )
-    ).cast("long")
-    w = Window.partitionBy("src").orderBy("__d", "dst")
-
-    def _top_r(cand: DataFrame) -> DataFrame:
-        return (
-            cand.withColumn("__d", d_unrolled)
-            .withColumn("__rk", F.dense_rank().over(w))
-            .where(F.col("__rk") <= r)
-            .select("src", "dst")
-            .dropDuplicates(["src", "dst"])
-        )
-
     # delta srcs: candidates = (standing ∪ delta) members of their cells
     cand_dst = bnodes.select(
         F.col("node").alias("dst"), F.col("qv").alias("__w"), "cell"
@@ -2813,11 +2678,12 @@ def _nsw_insert_new_edges(
         dx.select(F.col("node").alias("dst"), F.col("qv").alias("__w"),
                   "cell")
     )
-    delta_edges = _top_r(
+    delta_edges = _pair_top_r(
         dx.select(F.col("node").alias("src"), F.col("qv").alias("__v"),
                   "cell")
         .join(cand_dst, "cell")
-        .where(F.col("src") != F.col("dst"))
+        .where(F.col("src") != F.col("dst")),
+        cents, r,
     )
 
     # affected standing srcs: saved survivors ∪ delta cell-mates
@@ -2843,7 +2709,7 @@ def _nsw_insert_new_edges(
         )
         .select("src", "__v", "dst", "__w")
     )
-    relinked = _top_r(old_cand.unionByName(new_cand))
+    relinked = _pair_top_r(old_cand.unionByName(new_cand), cents, r)
 
     # merged reps: per-cell MIN(standing rep, delta min-id)
     old_reps = spark.read.parquet(f"{path}/reps")
@@ -2893,23 +2759,12 @@ def nsw_insert_writeback(
     read-overwrite cycles); the checkpointed working set is bounded by
     the touched partitions, i.e. proportional to the batch's cell
     footprint, never the corpus. Returns the rewritten edge cell ids."""
-    d = (
-        delta.select(
-            F.col(id_col).alias("node"),
-            quantize_global(vec_col, scale).alias("qv"),
-        )
-        .withColumn("cells", _arg_top_cids("qv", cents, n_assign))
-        .localCheckpoint(eager=True)
-    )
-    touched = sorted(
-        r0["c"] for r0 in
-        d.select(F.explode("cells").alias("c")).distinct().collect()
+    d, touched = _nsw_assign_batch(
+        delta, cents, n_assign, scale, id_col, vec_col
     )
     if not touched:
         return []
-    new_edges, reps = _nsw_insert_new_edges(
-        spark, path, cents, d, touched, r=r, n_assign=n_assign,
-    )
+    new_edges, reps = _nsw_insert_new_edges(spark, path, cents, d, touched, r)
     bnodes = (
         spark.read.parquet(f"{path}/nodes")
         .where(F.col("cell").isin(touched))
@@ -2924,56 +2779,81 @@ def nsw_insert_writeback(
         bnodes.select("node", "qv").dropDuplicates(["node"])
         .unionByName(d.select("node", "qv"))
     )
-    new_rows = (
-        new_edges
-        .join(vec_lookup.select(F.col("node").alias("dst"),
-                                F.col("qv").alias("dv")), "dst")
-        .join(cells_lookup.select(F.col("node").alias("src"), "cells"),
-              "src")
-        .select("src", "dst", "dv", "cells",
-                F.posexplode("cells").alias("pos", "cell"))
+    new_rows = _nsw_edge_rows(new_edges, vec_lookup, cells_lookup) \
         .localCheckpoint(eager=True)
-    )
     rewrite_cells = sorted(
         r0["cell"] for r0 in new_rows.select("cell").distinct().collect()
     )
-    replaced_srcs = cells_lookup.select(F.col("node").alias("src"))
+    nodes = bnodes.select("node", "qv", "cells", "cell").unionByName(
+        d.select("node", "qv", "cells", F.explode("cells").alias("cell"))
+    )
+    _nsw_write_back(
+        spark, path, nodes, new_rows,
+        cells_lookup.select(F.col("node").alias("src")), rewrite_cells, reps,
+    )
+    return [int(c) for c in rewrite_cells]
+
+
+def _nsw_edge_rows(
+    edges: DataFrame, vecs: DataFrame, cells: DataFrame
+) -> DataFrame:
+    """(src, dst) edges as edge-layout rows (src, dst, dv, cells, pos,
+    cell): the dst vector from ``vecs`` (node, qv), the src's cell list
+    from ``cells`` (node, cells), one copy per src cell."""
+    return (
+        edges
+        .join(vecs.select(F.col("node").alias("dst"),
+                          F.col("qv").alias("dv")), "dst")
+        .join(cells.select(F.col("node").alias("src"), "cells"), "src")
+        .select("src", "dst", "dv", "cells",
+                F.posexplode("cells").alias("pos", "cell"))
+    )
+
+
+def _nsw_write_back(
+    spark,
+    path: str,
+    nodes: DataFrame,
+    new_rows: DataFrame,
+    replaced: DataFrame,
+    rewrite_cells: list[int],
+    reps: DataFrame,
+) -> tuple[DataFrame, DataFrame]:
+    """Apply a maintenance step to a ``build_nsw_insert_layout`` root in
+    place: ``nodes`` replaces the node partitions it holds; the edge
+    partitions ``rewrite_cells`` become their rows whose src is not in
+    ``replaced`` (src) plus ``new_rows``; ``reps`` overwrites the reps
+    table. Node and edge writes are DYNAMIC partition overwrites, so
+    every other partition stays byte-stable. All three frames are
+    checkpointed before the first write, because each reads the root it
+    overwrites (Spark forbids read-overwrite cycles); the checkpointed
+    set is bounded by the rewritten partitions. Returns the (nodes,
+    edges) frames as written."""
     preserved = (
         spark.read.parquet(f"{path}/edges")
         .where(F.col("cell").isin(rewrite_cells))  # pruned read
-        .join(replaced_srcs, "src", "left_anti")
+        .join(replaced, "src", "left_anti")
         .select("src", "dst", "dv", "cells", "pos", "cell")
-        .localCheckpoint(eager=True)
     )
-    old_nodes = (
-        bnodes.select("node", "qv", "cells", "cell")
-        .localCheckpoint(eager=True)
+    nodes, edges, reps = (
+        f.localCheckpoint(eager=True)
+        for f in (nodes, preserved.unionByName(new_rows), reps)
     )
-    new_nodes = d.select(
-        "node", "qv", "cells", F.explode("cells").alias("cell")
-    )
-    reps = reps.localCheckpoint(eager=True)
-
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", None)
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+    key = "spark.sql.sources.partitionOverwriteMode"
+    prev = spark.conf.get(key, None)
+    spark.conf.set(key, "dynamic")
     try:
-        (
-            old_nodes.unionByName(new_nodes)
-            .write.mode("overwrite").partitionBy("cell")
-            .parquet(f"{path}/nodes")
-        )
-        (
-            preserved.unionByName(new_rows)
-            .write.mode("overwrite").partitionBy("cell")
-            .parquet(f"{path}/edges")
-        )
+        for name, f in (("nodes", nodes), ("edges", edges)):
+            f.write.mode("overwrite").partitionBy("cell").parquet(
+                f"{path}/{name}"
+            )
     finally:
         if prev is None:
-            spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
+            spark.conf.unset(key)
         else:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+            spark.conf.set(key, prev)
     reps.write.mode("overwrite").parquet(f"{path}/reps")
-    return [int(c) for c in rewrite_cells]
+    return nodes, edges
 
 
 def nsw_delete_integer(
@@ -3016,36 +2896,15 @@ def nsw_delete_integer(
     never collected — a large purge (GDPR sweep) stays distributed.
     Production write-back = dynamic partition overwrite of the touched
     cell directories; here the merged frame is returned for the gate."""
-    d = (
-        deleted.select(
-            F.col(id_col).alias("node"),
-            quantize_global(vec_col, scale).alias("qv"),
-        )
-        .withColumn("cells", _arg_top_cids("qv", cents, n_assign))
-        .localCheckpoint(eager=True)
-    )
-    touched = sorted(
-        r0["c"] for r0 in
-        d.select(F.explode("cells").alias("c")).distinct().collect()
+    d, touched = _nsw_assign_batch(
+        deleted, cents, n_assign, scale, id_col, vec_col
     )
     if not touched:  # empty tombstone batch: the standing index stands
         return nsw_layout_edges(spark, path)
     relinked, reps, _affected, _cand_cells = _nsw_delete_parts(
         spark, path, cents, d, touched, r=r,
     )
-    untouched = ~F.arrays_overlap(
-        F.col("cells"), F.array(*[F.lit(int(c)) for c in touched])
-    )
-    unaffected = (
-        spark.read.parquet(f"{path}/edges")
-        .where((F.col("pos") == 0) & untouched)
-        .select("src", "dst")
-    )
-    return (
-        unaffected
-        .unionByName(relinked)
-        .unionByName(_nsw_bridges(reps))
-    )
+    return _nsw_merged(spark, path, touched, relinked, reps)
 
 
 def _nsw_delete_parts(
@@ -3064,7 +2923,6 @@ def _nsw_delete_parts(
     top-r edges, the post-delete reps table, the affected-node frame
     (node, qv, cells — eagerly checkpointed), and the candidate cell
     closure the re-rank read."""
-    dim = len(cents[0][1])
     tomb = d.select("node")
     bnodes_t = (
         spark.read.parquet(f"{path}/nodes")
@@ -3088,13 +2946,6 @@ def _nsw_delete_parts(
         .select("node", "qv", "cell")
         .join(tomb, "node", "left_anti")
     )
-    d_unrolled = F.expr(
-        " + ".join(
-            f"(__v[{i}] - __w[{i}]) * (__v[{i}] - __w[{i}])"
-            for i in range(dim)
-        )
-    ).cast("long")
-    w = Window.partitionBy("src").orderBy("__d", "dst")
     pairs = (
         affected.select(
             F.col("node").alias("src"), F.col("qv").alias("__v"),
@@ -3107,13 +2958,7 @@ def _nsw_delete_parts(
         )
         .where(F.col("src") != F.col("dst"))
     )
-    relinked = (
-        pairs.withColumn("__d", d_unrolled)
-        .withColumn("__rk", F.dense_rank().over(w))
-        .where(F.col("__rk") <= r)
-        .select("src", "dst")
-        .dropDuplicates(["src", "dst"])
-    )
+    relinked = _pair_top_r(pairs, cents, r)
     touched_reps = (
         bnodes_t.where(F.element_at("cells", 1) == F.col("cell"))
         .join(tomb, "node", "left_anti")
@@ -3155,17 +3000,8 @@ def nsw_delete_writeback(
     a full rebuild on the survivors. Returns the rewritten edge cells."""
     import shutil as _shutil
 
-    d = (
-        deleted.select(
-            F.col(id_col).alias("node"),
-            quantize_global(vec_col, scale).alias("qv"),
-        )
-        .withColumn("cells", _arg_top_cids("qv", cents, n_assign))
-        .localCheckpoint(eager=True)
-    )
-    touched = sorted(
-        r0["c"] for r0 in
-        d.select(F.explode("cells").alias("c")).distinct().collect()
+    d, touched = _nsw_assign_batch(
+        deleted, cents, n_assign, scale, id_col, vec_col
     )
     if not touched:
         return []
@@ -3180,68 +3016,29 @@ def nsw_delete_writeback(
         .where(F.col("cell").isin(cand_cells))
         .select("node", "qv").dropDuplicates(["node"])
     )
-    new_rows = (
-        relinked
-        .join(vec_lookup.select(F.col("node").alias("dst"),
-                                F.col("qv").alias("dv")), "dst")
-        .join(affected.select(F.col("node").alias("src"), "cells"), "src")
-        .select("src", "dst", "dv", "cells",
-                F.posexplode("cells").alias("pos", "cell"))
-        .localCheckpoint(eager=True)
-    )
-    replaced_srcs = (
+    replaced = (
         affected.select(F.col("node").alias("src"))
         .unionByName(d.select(F.col("node").alias("src")))
-    )
-    preserved = (
-        spark.read.parquet(f"{path}/edges")
-        .where(F.col("cell").isin(rewrite_cells))  # pruned read
-        .join(replaced_srcs, "src", "left_anti")
-        .select("src", "dst", "dv", "cells", "pos", "cell")
-        .localCheckpoint(eager=True)
     )
     surviving_nodes = (
         spark.read.parquet(f"{path}/nodes")
         .where(F.col("cell").isin(touched))
         .join(d.select("node"), "node", "left_anti")
         .select("node", "qv", "cells", "cell")
-        .localCheckpoint(eager=True)
     )
-    reps = reps.localCheckpoint(eager=True)
-
-    edge_out = preserved.unionByName(new_rows)
-    written_edge_cells = {
-        r0["cell"] for r0 in edge_out.select("cell").distinct().collect()
-    }
-    written_node_cells = {
-        r0["cell"]
-        for r0 in surviving_nodes.select("cell").distinct().collect()
-    }
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", None)
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (
-            surviving_nodes
-            .write.mode("overwrite").partitionBy("cell")
-            .parquet(f"{path}/nodes")
-        )
-        (
-            edge_out
-            .write.mode("overwrite").partitionBy("cell")
-            .parquet(f"{path}/edges")
-        )
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-        else:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    nodes, edges = _nsw_write_back(
+        spark, path, surviving_nodes,
+        _nsw_edge_rows(relinked, vec_lookup, affected),
+        replaced, rewrite_cells, reps,
+    )
     # emptied partitions: present in the rewrite set but absent from the
     # written data — remove, or stale rows would survive the purge
-    for c in set(rewrite_cells) - written_edge_cells:
-        _shutil.rmtree(f"{path}/edges/cell={c}", ignore_errors=True)
-    for c in set(touched) - written_node_cells:
-        _shutil.rmtree(f"{path}/nodes/cell={c}", ignore_errors=True)
-    reps.write.mode("overwrite").parquet(f"{path}/reps")
+    for cells, sub, frame in ((rewrite_cells, "edges", edges),
+                              (touched, "nodes", nodes)):
+        written = {r0["cell"] for r0 in
+                   frame.select("cell").distinct().collect()}
+        for c in set(cells) - written:
+            _shutil.rmtree(f"{path}/{sub}/cell={c}", ignore_errors=True)
     return [int(c) for c in rewrite_cells]
 
 

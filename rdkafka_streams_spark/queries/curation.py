@@ -2428,7 +2428,7 @@ def q235_cogroup_reconcile(spark: SparkSession, sf_dir: str) -> DataFrame:
     purchases = ev.where(F.col("event_type") == "purchase").groupBy("user_id")
     errors = ev.where(F.col("event_type") == "error").groupBy("user_id")
 
-    def reconcile(key, pdf_p: pd.DataFrame, pdf_e: pd.DataFrame) -> pd.DataFrame:
+    def reconcile(key: tuple, pdf_p: pd.DataFrame, pdf_e: pd.DataFrame) -> pd.DataFrame:
         return pd.DataFrame(
             [
                 {
@@ -3198,7 +3198,7 @@ def q248_holt_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
     def trunc_div10(x: int) -> int:
         return x // 10 if x >= 0 else -((-x) // 10)
 
-    def holt(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def holt(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("day")
         vs = [int(v) for v in pdf["v"]]
         l, b = vs[0], 0

@@ -30,10 +30,13 @@ b64); arbitrary binary falls back to base64 (``"k"``/``"v"``). ``"v": null``
 an explicit per-line offset ``"o"`` so original offsets survive compaction
 with gaps, exactly like a broker's cleaner (``TopicLog.compact``).
 Segments are immutable and published atomically: written to a hidden temp
-file, then ``os.link``ed to their final name (link fails if the name exists,
-so two concurrent producers can never claim the same offset range — the
-loser re-lists and retries, which serializes appends per partition exactly
-like a broker does). Offsets live IN the segment name, so planning a read is
+file, then ``os.link``ed to their final name while the producer holds the
+partition's claim lock (an ``fcntl.flock`` on ``p<partition>/.claim.lock``),
+so reading the end offset and linking the segment at it is one step: two
+concurrent producers can never claim overlapping offset ranges, which
+serializes appends per partition exactly like a broker does. The kernel
+drops the lock when its holder dies, so a crashed producer never blocks the
+partition. Offsets live IN the segment name, so planning a read is
 a directory listing, never a scan. On a cluster the root sits on shared
 storage; each (topic, partition) maps to one Spark input partition, so
 parallelism scales with partition count like the real connector.
@@ -47,6 +50,8 @@ replays the batch (duplicate appends possible, lost appends not).
 from __future__ import annotations
 
 import base64
+import contextlib
+import fcntl
 import gzip
 import json
 import os
@@ -168,6 +173,23 @@ def _list_segments(part_dir: str) -> list[tuple[int, int, str]]:
 def _end_offset(part_dir: str) -> int:
     segs = _list_segments(part_dir)
     return segs[-1][0] + segs[-1][1] if segs else 0
+
+
+@contextlib.contextmanager
+def _claim_lock(part_dir: str):
+    """Hold the partition's exclusive offset claim. A producer reads the
+    end offset and links its segment there only under this lock: segment
+    names carry (start, count, codec), so a rival with the same start but
+    another count or codec links a DIFFERENT name and ``os.link`` alone
+    cannot stop the overlap. ``flock`` is released by the kernel when the
+    holder exits or dies, so no stale claim outlives a crash."""
+    fd = os.open(os.path.join(part_dir, ".claim.lock"),
+                 os.O_RDWR | os.O_CREAT, 0o644)
+    try:
+        fcntl.flock(fd, fcntl.LOCK_EX)
+        yield
+    finally:
+        os.close(fd)
 
 
 def _open_seg(path: str):
@@ -387,10 +409,10 @@ def _publish_segment(
 ) -> int:
     """Atomically append ``lines`` as one segment; returns its start offset.
 
-    The ``os.link`` target embeds the claimed start offset — if another
-    producer published first, the link raises FileExistsError and we re-list
-    for the new end offset. This is the whole per-partition ordering
-    protocol: no locks, safe on any POSIX filesystem.
+    The ``os.link`` target embeds the claimed start offset, read and
+    linked under the partition's ``_claim_lock``; a name that exists
+    anyway (a segment an admin rewrite put there) raises FileExistsError
+    and we re-list for the new end offset.
 
     ``compression="gzip"`` writes the segment gzip'd (suffix ``.jsonl.gz``)
     — the broker-side shape of a producer batch with ``compression.type``
@@ -412,14 +434,17 @@ def _publish_segment(
             f.write(body)
         suffix = ".jsonl"
     try:
-        for _ in range(max_retries):
-            start = _end_offset(part_dir)
-            final = os.path.join(part_dir, f"seg-{start:020d}-{len(lines)}{suffix}")
-            try:
-                os.link(tmp, final)
-                return start
-            except FileExistsError:
-                continue  # lost the race for this start offset; re-list
+        with _claim_lock(part_dir):
+            for _ in range(max_retries):
+                start = _end_offset(part_dir)
+                final = os.path.join(
+                    part_dir, f"seg-{start:020d}-{len(lines)}{suffix}"
+                )
+                try:
+                    os.link(tmp, final)
+                    return start
+                except FileExistsError:
+                    continue  # the name is taken; re-list
         raise RuntimeError(f"could not claim an offset range in {part_dir}")
     finally:
         os.unlink(tmp)
@@ -3859,22 +3884,23 @@ def _commit_staged_atomic(messages, root: str, topic: str) -> None:
                 continue
             ino = os.stat(path).st_ino
             linked = False
-            for _ in range(1000):
-                start = _end_offset(pdir)
-                final = os.path.join(pdir, f"seg-{start:020d}-{n}.jsonl")
-                st["wal"].append((final, ino))
-                # LSO floor for concurrent read_committed streams: they
-                # must not plan past this in-flight batch's first record
-                lso = st.setdefault("lso", {}).setdefault(topic, {})
-                lso[str(pid)] = min(lso.get(str(pid), start), start)
-                log._txn_write(tag, st)  # intent BEFORE the link
-                try:
-                    os.link(path, final)
-                    linked = True
-                    break
-                except FileExistsError:
-                    continue  # foreign producer claimed it; intent is
-                    # inode-guarded, so the stale entry is rollback-inert
+            with _claim_lock(pdir):
+                for _ in range(1000):
+                    start = _end_offset(pdir)
+                    final = os.path.join(pdir, f"seg-{start:020d}-{n}.jsonl")
+                    st["wal"].append((final, ino))
+                    # LSO floor for concurrent read_committed streams: they
+                    # must not plan past this in-flight batch's first record
+                    lso = st.setdefault("lso", {}).setdefault(topic, {})
+                    lso[str(pid)] = min(lso.get(str(pid), start), start)
+                    log._txn_write(tag, st)  # intent BEFORE the link
+                    try:
+                        os.link(path, final)
+                        linked = True
+                        break
+                    except FileExistsError:
+                        continue  # name taken; intent is inode-guarded,
+                        # so the stale entry is rollback-inert
             if not linked:
                 raise RuntimeError(f"could not claim an offset range in {pdir}")
             os.unlink(path)

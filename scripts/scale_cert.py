@@ -52,16 +52,13 @@ from pyspark.sql import functions as F  # noqa: E402
 
 from rdkafka_streams_spark import get_spark, tune_for_bench  # noqa: E402
 from rdkafka_streams_spark.core.io import TABLES, load_table  # noqa: E402
-# count_key_exchanges (r15): invariance is certified on KEYED shuffles.
+# exchange_counts(df).keyed (r15): invariance is certified on KEYED shuffles.
 # The adaptive spread guard (operators/spread.py) inserts a round-robin
 # widening exchange only when an input arrives narrower than the cluster
 # parallelism (single-row-group files at 1x) and is identity once the
 # scaled data has enough splits - so a RAW exchange count can differ
 # between 1x and 8x while every data-growing shuffle is invariant.
-from rdkafka_streams_spark.core.plan import (  # noqa: E402
-    count_key_exchanges,
-    count_rr_exchanges,
-)
+from rdkafka_streams_spark.core.plan import exchange_counts  # noqa: E402
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -303,8 +300,7 @@ def certify_query(spark, name: str, fn, sf_dir: str) -> dict:
     pass dodged the host noise. The first (warm) pass also pays JIT and
     scan-cache warmup, which is exactly why it is not the recorded one."""
     df = fn(spark, sf_dir)
-    exchanges = count_key_exchanges(df)
-    rr_exchanges = count_rr_exchanges(df)
+    exchanges, rr_exchanges = exchange_counts(df)
     best = None
     for _ in range(2):
         for _g in range(2):
@@ -343,9 +339,10 @@ def plan_sweep(spark, registry, dirs: dict[int, str]) -> dict:
             for m, d in sorted(dirs.items()):
                 t0 = time.perf_counter()
                 df = fn(spark, d)
+                ex = exchange_counts(df)
                 per[str(m)] = {
-                    "exchanges": count_key_exchanges(df),
-                    "rr_exchanges": count_rr_exchanges(df),
+                    "exchanges": ex.keyed,
+                    "rr_exchanges": ex.rr,
                     "build_sec": round(time.perf_counter() - t0, 2),
                 }
         except Exception as e:  # noqa: BLE001 - record, don't abort the sweep

@@ -25,7 +25,7 @@ from pyspark.sql import functions as F  # noqa: E402
 
 from rdkafka_streams_spark import get_spark, tune_for_bench  # noqa: E402
 from rdkafka_streams_spark.core.io import load_table  # noqa: E402
-from rdkafka_streams_spark.core.plan import count_exchanges, plan_string  # noqa: E402
+from rdkafka_streams_spark.core.plan import exchange_counts, plan_string  # noqa: E402
 from rdkafka_streams_spark.functions.money import disc_price_expr, money  # noqa: E402
 
 MULT = 8
@@ -123,7 +123,7 @@ def main() -> None:
         # build side's key count grows
         ("bloom", bloom_shape(l1, o1), bloom_shape(l8, o8)),
     ):
-        ex_s, ex_b = count_exchanges(small), count_exchanges(big)
+        ex_s, ex_b = sum(exchange_counts(small)), sum(exchange_counts(big))
         # warm then measure
         timed(small), timed(big)
         t_s, t_b = timed(small), timed(big)

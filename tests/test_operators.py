@@ -769,12 +769,6 @@ def test_ppjoin_matches_bruteforce(spark):
     assert got == expect
     assert (1, 4) in got and got[(1, 4)] == 1_000_000  # exact dup
     assert (1, 2) in got  # near-dup survives
-    # the scratch-materialized diamond (the 100 TB path) is result-identical
-    mat = {
-        (r["id1"], r["id2"]): r["jacc_ppm"]
-        for r in ppjoin_pairs(docs, tau_ppm=400_000, materialize=True).collect()
-    }
-    assert mat == got
 
 
 def test_count_triangles_known_graph(spark):
@@ -1388,6 +1382,124 @@ def test_pq_requantize_respects_scale(spark):
         *_pq_dt_cols("__q", blocks, sub),
     ).orderBy("vec_id").collect()
     assert [tuple(r) for r in a] == [tuple(r) for r in b]
+
+
+def test_nearest_centroid_tie_and_null_rules(spark):
+    """``_arg_top_cids(v, cents, 1)`` is the library's nearest-centroid
+    pick (k-means assignment, PQ encode, IVF cells): an exact distance
+    tie goes to the smaller cid, and a NULL or short vector — NULL
+    distance to every centroid — lands in the first cid."""
+    from rdkafka_streams_spark.llm.similarity import _arg_top_cids
+
+    cents = [(1, [0, 0]), (2, [10, 0]), (3, [0, 10])]
+    rows = [
+        (0, [5, 0]),    # 25 to cells 1 and 2 -> 1
+        (1, [10, 10]),  # 100 to cells 2 and 3 -> 2
+        (2, [9, 1]),    # nearest 2
+        (3, [0, 11]),   # nearest 3
+        (4, None),      # NULL -> 1
+        (5, [7]),       # short -> 1
+    ]
+    df = spark.createDataFrame(rows, "id long, v array<bigint>")
+    got = {
+        r["id"]: r["cid"]
+        for r in df.select(
+            "id", _arg_top_cids("v", cents, 1)[0].alias("cid")
+        ).collect()
+    }
+    assert got == {0: 1, 1: 2, 2: 2, 3: 3, 4: 1, 5: 1}
+
+
+def test_kmeans_integer_equals_one_block_lockstep_trainer(spark, sf_dir):
+    """kmeans_integer is the one-block case of the PQ trainer's lockstep
+    loop: the same final centroids and the same (id, qv, cid)
+    assignments as ``build_pq_codebooks_integer`` with m=1."""
+    from rdkafka_streams_spark.core.io import load_table
+    from rdkafka_streams_spark.llm.similarity import (
+        build_pq_codebooks_integer,
+        kmeans_integer,
+    )
+
+    emb = load_table(spark, sf_dir, "embeddings").where(F.col("vec_id") < 300)
+    assigned, cents = kmeans_integer(emb, k=4, n_iters=2)
+    [(j, pq_assigned, pq_cents)] = build_pq_codebooks_integer(
+        emb, m=1, n_codes=4, n_iters=2
+    )
+
+    def rows(df):
+        return sorted(
+            (r["vec_id"], tuple(r["qv"]), r["cid"])
+            for r in df.select("vec_id", "qv", "cid").collect()
+        )
+
+    assert j == 0 and cents == pq_cents and len(cents) == 4
+    assert rows(assigned) == rows(pq_assigned)
+
+
+def test_ivfpq_residual_codebooks_match_per_slice_kmeans(spark, sf_dir):
+    """By-residual IVFPQ's codebooks are one ``kmeans_integer`` per
+    residual slice: its answers equal a pure-Python ADC search over
+    codebooks trained that way (residual = quantized vector minus its
+    nearest final coarse centroid; codes and tables on the ×scale
+    re-quantized residual slices; top-k by (adist, id))."""
+    from rdkafka_streams_spark.core.io import load_table
+    from rdkafka_streams_spark.llm.similarity import (
+        _pq_block_slice,
+        ivfpq_residual_search_integer,
+        kmeans_integer,
+        quantize_global,
+    )
+
+    emb = load_table(spark, sf_dir, "embeddings").where(F.col("vec_id") < 400)
+    queries = emb.where(F.col("vec_id") % 100 == 0)
+    k, nprobe, n_cells, m, n_codes, sub = 5, 2, 4, 4, 4, 16
+    got = sorted(tuple(r) for r in ivfpq_residual_search_integer(
+        emb, queries, k=k, nprobe=nprobe, n_cells=n_cells, coarse_iters=2,
+        m=m, n_codes=n_codes, pq_iters=2,
+    ).collect())
+
+    def l2(a, b):
+        return sum((x - y) ** 2 for x, y in zip(a, b))
+
+    def nearest(v, cents, n=1):
+        return [cid for _, cid in sorted((l2(v, qc), cid) for cid, qc in cents)[:n]]
+
+    def blocks(r):  # the j-th residual slice, re-quantized (x scale 1000)
+        return [[x * 1000 for x in r[j * sub:(j + 1) * sub]] for j in range(m)]
+
+    _, cells = kmeans_integer(emb, k=n_cells, n_iters=2)
+    coarse = dict(cells)
+    vecs = {
+        r[0]: list(r[1])
+        for r in emb.select("vec_id", quantize_global("embedding")).collect()
+    }
+    cell = {i: nearest(v, cells)[0] for i, v in vecs.items()}
+    resid = {i: [x - y for x, y in zip(v, coarse[cell[i]])] for i, v in vecs.items()}
+    rdf = spark.createDataFrame(list(resid.items()), "vec_id long, r array<bigint>")
+    books = [
+        kmeans_integer(
+            rdf.select("vec_id", _pq_block_slice("r", j, sub).alias("r")),
+            k=n_codes, n_iters=2, vec_col="r",
+        )[1]
+        for j in range(m)
+    ]
+    codes = {
+        i: [nearest(b, books[j])[0] for j, b in enumerate(blocks(r))]
+        for i, r in resid.items()
+    }
+    want = []
+    for q in sorted(i for i in vecs if i % 100 == 0):
+        scored = []
+        for c in nearest(vecs[q], cells, nprobe):
+            qb = blocks([x - y for x, y in zip(vecs[q], coarse[c])])
+            tables = [{cid: l2(qb[j], qc) for cid, qc in books[j]} for j in range(m)]
+            scored += [
+                (sum(tables[j][codes[i][j]] for j in range(m)), i)
+                for i in vecs if cell[i] == c and i != q
+            ]
+        want += [(q, i, d) for d, i in sorted(scored)[:k]]
+    assert len(want) == 4 * k
+    assert got == sorted(want)
 
 
 def test_media_decode_error_gates():

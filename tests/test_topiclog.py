@@ -599,6 +599,70 @@ def test_concurrent_appends_offsets_dense(root):
     assert len(set(counts)) == 40
 
 
+# One rival producer: publishes ``n`` records to a partition directory,
+# meeting its twin on two file barriers — once before publishing (both are
+# started), once between reading the end offset and linking the segment.
+_RIVAL_PRODUCER = r"""
+import os, sys, time
+from rdkafka_streams_spark.streaming import topiclog
+
+pdir, sync, me, n = sys.argv[1], sys.argv[2], sys.argv[3], int(sys.argv[4])
+
+def meet(stage, wait_s):
+    open(os.path.join(sync, f"{stage}-{me}"), "w").close()
+    deadline = time.monotonic() + wait_s
+    while time.monotonic() < deadline and sum(
+        f.startswith(stage + "-") for f in os.listdir(sync)
+    ) < 2:
+        time.sleep(0.005)
+
+read_end = topiclog._end_offset
+
+def end_then_meet(part_dir):
+    topiclog._end_offset = read_end
+    start = read_end(part_dir)
+    meet("claim", 2.0)
+    return start
+
+topiclog._end_offset = end_then_meet
+meet("start", 60.0)
+topiclog._publish_segment(pdir, ['{"vs":"%s","ts":0}' % me] * n)
+"""
+
+
+def test_two_producer_processes_claim_disjoint_ranges(tmp_path):
+    """Two producer PROCESSES publishing to one partition at the same
+    moment get disjoint offset ranges. Each reads the end offset, then
+    waits (up to 2 s) for the other to read it too before linking: with
+    a claim that is exclusive only on the full segment name, both read
+    0 and link seg-0-3 and seg-0-5, an overlap. The claim lock makes the
+    second producer read the end offset only after the first linked."""
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    pdir = tmp_path / "t" / "p0"
+    sync = tmp_path / "sync"
+    pdir.mkdir(parents=True)
+    sync.mkdir()
+    env = {**os.environ,
+           "PYTHONPATH": os.pathsep.join(
+               [repo, os.environ.get("PYTHONPATH", "")])}
+    procs = [
+        subprocess.Popen(
+            [sys.executable, "-c", _RIVAL_PRODUCER, str(pdir), str(sync),
+             me, str(n)],
+            env=env,
+        )
+        for me, n in (("a", 3), ("b", 5))
+    ]
+    assert [p.wait(timeout=120) for p in procs] == [0, 0]
+    from rdkafka_streams_spark.streaming.topiclog import _list_segments
+
+    spans = [(start, count) for start, count, _ in _list_segments(str(pdir))]
+    assert spans in ([(0, 3), (3, 5)], [(0, 5), (5, 3)]), spans
+
+
 def test_streaming_scd2_merge_matches_batch_rebuild(spark, root, tmp_path):
     """CDC over the bus, incrementally: change bursts stream off a topiclog
     topic in micro-batches; scd2_foreach_batch merges each into a versioned

@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import os
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import SparkSession
 
 # Build-time confs: these must be set before the JVM starts.
@@ -89,7 +90,7 @@ def tune_runtime(spark: SparkSession) -> SparkSession:
     for k, v in RUNTIME_CONFS.items():
         try:
             spark.conf.set(k, v)
-        except Exception:  # immutable conf on some builds — keep going
+        except AnalysisException:  # a conf this session refuses to change
             pass
     return spark
 

@@ -585,60 +585,52 @@ def _publish_lines(root: str, topic: str, parts, cfg: dict,
             time.sleep(tms / 1000.0)
 
 
+def _scan_segment(path: str, seg_start: int) -> Iterator[tuple[int, dict, str]]:
+    """Yield (offset, record, line) for the non-blank lines of one segment
+    — the one per-line parse the admin scans share. Blank lines are
+    skipped, as the columnar reader skips them. Append segments are dense
+    (the i-th record sits at ``seg_start + i``); compacted segments carry
+    explicit, possibly-gapped offsets (``"o"``)."""
+    with _open_seg(path) as f:
+        for i, line in enumerate(ln for ln in f if ln.strip()):
+            rec = json.loads(line)
+            yield rec.get("o", seg_start + i), rec, line.rstrip("\n")
+
+
 def _read_range(
     root: str, topic: str, pid: int, start: int, end: int,
     include_headers: bool = False,
     excluded_txns: frozenset[str] | None = None,
 ) -> Iterator[tuple]:
-    """Yield envelope tuples for offsets [start, end) of one partition.
+    """Envelope tuples for offsets [start, end) of one partition: a row
+    view over _read_range_arrow, in the envelope's column order.
     ``include_headers`` appends the Kafka source's headers column (ordered
-    (key, value) pairs, None when the record carries none). CONTROL records
-    (txn markers) are never yielded — Kafka never delivers them;
-    ``excluded_txns`` additionally drops records of those transaction ids
-    (the read_committed filter). Either filter leaves offset GAPS in the
-    yielded stream, exactly as a read_committed Kafka fetch does."""
-    for seg_start, count, path in _list_segments_tiered(root, topic, pid):
-        if seg_start + count <= start:
-            continue
-        if seg_start >= end:
-            break
-        with _open_seg(path) as f:
-            for i, line in enumerate(f):
-                rec = json.loads(line)
-                # compacted segments carry explicit, possibly-gapped
-                # offsets ("o"); append segments stay dense
-                off = rec.get("o", seg_start + i)
-                if off < start:
-                    continue
-                if off >= end:
-                    break
-                if "ctl" in rec:
-                    continue
-                if excluded_txns is not None and rec.get("x") in excluded_txns:
-                    continue
-                row = (
-                    _rec_key(rec),
-                    _rec_val(rec),
-                    topic,
-                    pid,
-                    off,
-                    datetime.fromtimestamp(rec["ts"] / 1000.0, tz=timezone.utc),
-                    0,  # timestampType: CREATE_TIME, like the Kafka source
-                )
-                if include_headers:
-                    row += (_wire_to_headers(rec.get("h")),)
-                yield row
+    (key, value) pairs, None when the record carries none). Control records
+    and ``excluded_txns`` leave offset GAPS, as in _read_range_arrow."""
+    for batch in _read_range_arrow(root, topic, pid, start, end,
+                                   excluded_txns=excluded_txns,
+                                   include_headers=include_headers):
+        cols = [c.to_pylist() for c in batch.columns]
+        if include_headers:
+            cols[7] = [None if hs is None
+                       else [(h["key"], h["value"]) for h in hs]
+                       for hs in cols[7]]
+        yield from zip(*cols)
 
 
 def _seg_table(path: str, seg_start: int, start: int, end: int,
-               excluded_txns: frozenset[str] | None = None):
+               excluded_txns: frozenset[str] | None = None,
+               include_headers: bool = False):
     """Parse one segment file with pyarrow's C++ JSONL reader and return
-    (table-of-{key,value,ts_ms}, offset array) for the rows in [start, end),
-    or None if the range misses. The wire format keeps UTF-8 payloads as
-    plain JSON strings (``ks``/``vs``), so the hot path is a zero-Python
-    columnar parse + a zero-copy string→binary cast (~14× over per-line
-    ``json.loads``); only legacy/binary base64 fields drop to a per-row
-    decode loop, and only for the rows of THIS segment. Control records
+    (table-of-{key,value,ts_us[,headers]}, offset array) for the rows in
+    [start, end), or None if the range misses. The wire format keeps UTF-8
+    payloads as plain JSON strings (``ks``/``vs``), so the hot path is a
+    zero-Python columnar parse + a zero-copy string→binary cast (~14× over
+    per-line ``json.loads``); only legacy/binary base64 fields drop to a
+    per-row decode loop, and only for the rows of THIS segment. Header
+    values are always base64 on the wire (``h`` = ``[[key, b64], ...]``),
+    so ``include_headers`` adds the ``h`` field to the parse and decodes it
+    per row, after the range and txn filters. Control records
     are always masked out; ``excluded_txns`` adds the read_committed
     transaction filter — both columnar ``is_in`` passes that cost nothing
     when the segment carries no txn fields (all-null fast path)."""
@@ -657,6 +649,8 @@ def _seg_table(path: str, seg_start: int, start: int, end: int,
             pa.field("ctl", pa.string()),
         ]
     )
+    if include_headers:
+        wire = wire.append(pa.field("h", pa.list_(pa.list_(pa.string()))))
     if os.path.getsize(path) == 0:
         # delete_records can leave a zero-record spanning/active segment
         # (its name still carries the logical span); Arrow's JSON reader
@@ -713,61 +707,77 @@ def _seg_table(path: str, seg_start: int, start: int, end: int,
             pa.binary(),
         )
 
-    out = pa.table(
-        {
-            "key": as_binary(tbl["k"], tbl["ks"]),
-            "value": as_binary(tbl["v"], tbl["vs"]),
-            "ts_us": pc.multiply(tbl["ts"], pa.scalar(1000, pa.int64())),
-        }
-    )
-    return out, offs
+    cols = {
+        "key": as_binary(tbl["k"], tbl["ks"]),
+        "value": as_binary(tbl["v"], tbl["vs"]),
+        "ts_us": pc.multiply(tbl["ts"], pa.scalar(1000, pa.int64())),
+    }
+    if include_headers:
+        cols["headers"] = pa.array(
+            [_wire_to_headers(h) for h in tbl["h"].to_pylist()], _headers_type())
+    return pa.table(cols), offs
+
+
+def _headers_type():
+    """Arrow type of the envelope's ``headers`` column (HEADERS_DDL)."""
+    import pyarrow as pa
+
+    return pa.list_(pa.struct([("key", pa.string()), ("value", pa.binary())]))
 
 
 def _read_range_arrow(
     root: str, topic: str, pid: int, start: int, end: int, batch_rows: int = 65536,
-    excluded_txns: frozenset[str] | None = None,
+    excluded_txns: frozenset[str] | None = None, include_headers: bool = False,
 ):
     """Yield Arrow RecordBatches for offsets [start, end) of one partition.
 
     Per segment: one C++ JSONL parse + columnar casts (see _seg_table);
-    per-row Python survives only for legacy base64 segments. Every read
-    but a headers read takes this path (see _read_best)."""
+    per-row Python survives only for legacy base64 payloads and for the
+    base64 header values of an ``include_headers`` read, which appends the
+    Kafka source's ``headers`` column. Every scan takes this path (see
+    _read_best); _read_range is its row view. CONTROL records (txn
+    markers) are never yielded — Kafka never delivers them;
+    ``excluded_txns`` additionally drops records of those transaction ids
+    (the read_committed filter). Either filter leaves offset GAPS, exactly
+    as a read_committed Kafka fetch does."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
-    schema = pa.schema(
-        [
-            pa.field("key", pa.binary()),
-            pa.field("value", pa.binary()),
-            pa.field("topic", pa.string()),
-            pa.field("partition", pa.int32()),
-            pa.field("offset", pa.int64()),
-            pa.field("timestamp", pa.timestamp("us", tz="UTC")),
-            pa.field("timestampType", pa.int32()),
-        ]
-    )
+    fields = [
+        pa.field("key", pa.binary()),
+        pa.field("value", pa.binary()),
+        pa.field("topic", pa.string()),
+        pa.field("partition", pa.int32()),
+        pa.field("offset", pa.int64()),
+        pa.field("timestamp", pa.timestamp("us", tz="UTC")),
+        pa.field("timestampType", pa.int32()),
+    ]
+    if include_headers:
+        fields.append(pa.field("headers", _headers_type()))
+    schema = pa.schema(fields)
     for seg_start, count, path in _list_segments_tiered(root, topic, pid):
         if seg_start + count <= start:
             continue
         if seg_start >= end:
             break
-        got = _seg_table(path, seg_start, start, end, excluded_txns)
+        got = _seg_table(path, seg_start, start, end, excluded_txns,
+                         include_headers)
         if got is None:
             continue
         seg, offs = got
         n = seg.num_rows
-        out = pa.table(
-            {
-                "key": seg["key"],
-                "value": seg["value"],
-                "topic": pa.array([topic] * n, pa.string()),
-                "partition": pa.array([pid] * n, pa.int32()),
-                "offset": offs,
-                "timestamp": pc.cast(seg["ts_us"], pa.timestamp("us", tz="UTC")),
-                "timestampType": pa.array([0] * n, pa.int32()),
-            }
-        ).cast(schema)
-        yield from out.to_batches(max_chunksize=batch_rows)
+        cols = {
+            "key": seg["key"],
+            "value": seg["value"],
+            "topic": pa.array([topic] * n, pa.string()),
+            "partition": pa.array([pid] * n, pa.int32()),
+            "offset": offs,
+            "timestamp": pc.cast(seg["ts_us"], pa.timestamp("us", tz="UTC")),
+            "timestampType": pa.array([0] * n, pa.int32()),
+        }
+        if include_headers:
+            cols["headers"] = seg["headers"]
+        yield from pa.table(cols).cast(schema).to_batches(max_chunksize=batch_rows)
 
 
 # ---------------------------------------------------------- driver-side admin
@@ -1058,26 +1068,24 @@ class TopicLog:
                 n_lines = 0
                 gapped = False
                 try:
-                    with _open_seg(path) as f:
-                        for i, ln in enumerate(ln for ln in f if ln.strip()):
-                            rec = json.loads(ln)
-                            if "ts" not in rec:
-                                issues.append(f"{name}:{i}: record missing ts")
-                            gapped = gapped or "o" in rec
-                            off = rec.get("o", seg_start + i)
-                            if not seg_start <= off < seg_start + count:
-                                issues.append(
-                                    f"{name}:{i}: offset {off} outside the "
-                                    f"name's span [{seg_start}, "
-                                    f"{seg_start + count})"
-                                )
-                            if last_off is not None and off <= last_off:
-                                issues.append(
-                                    f"{name}:{i}: offset {off} not "
-                                    f"increasing after {last_off}"
-                                )
-                            last_off = off
-                            n_lines += 1
+                    for i, (off, rec, _ln) in enumerate(
+                            _scan_segment(path, seg_start)):
+                        if "ts" not in rec:
+                            issues.append(f"{name}:{i}: record missing ts")
+                        gapped = gapped or "o" in rec
+                        if not seg_start <= off < seg_start + count:
+                            issues.append(
+                                f"{name}:{i}: offset {off} outside the "
+                                f"name's span [{seg_start}, "
+                                f"{seg_start + count})"
+                            )
+                        if last_off is not None and off <= last_off:
+                            issues.append(
+                                f"{name}:{i}: offset {off} not "
+                                f"increasing after {last_off}"
+                            )
+                        last_off = off
+                        n_lines += 1
                 except (OSError, ValueError) as exc:
                     issues.append(f"{name}: unreadable ({exc})")
                 if n_lines and not gapped and n_lines != count:
@@ -2682,19 +2690,16 @@ class TopicLog:
             runs: dict[tuple[int, int], dict[int, list[int]]] = {}
             for seg_start, _count, path in _list_segments_tiered(
                     self.root, topic, pid_part):
-                with _open_seg(path) as f:
-                    for i, line in enumerate(f):
-                        rec = json.loads(line)
-                        if "pi" not in rec:
-                            continue  # non-idempotent produce
-                        off = rec.get("o", seg_start + i)
-                        key = (int(rec["pi"]), int(rec["pe"]))
-                        ent = runs.setdefault(key, {}).get(int(rec["bs"]))
-                        if ent is None:
-                            runs[key][int(rec["bs"])] = [int(rec["sq"]), off]
-                        else:
-                            ent[0] = max(ent[0], int(rec["sq"]))
-                            ent[1] = min(ent[1], off)
+                for off, rec, _ln in _scan_segment(path, seg_start):
+                    if "pi" not in rec:
+                        continue  # non-idempotent produce
+                    key = (int(rec["pi"]), int(rec["pe"]))
+                    ent = runs.setdefault(key, {}).get(int(rec["bs"]))
+                    if ent is None:
+                        runs[key][int(rec["bs"])] = [int(rec["sq"]), off]
+                    else:
+                        ent[0] = max(ent[0], int(rec["sq"]))
+                        ent[1] = min(ent[1], off)
             by_pid: dict[int, tuple[int, dict[int, list[int]]]] = {}
             for (pi, pe), batches in runs.items():
                 if pi not in by_pid or pe > by_pid[pi][0]:
@@ -2963,23 +2968,16 @@ class TopicLog:
                     if os.path.exists(twin):
                         os.unlink(twin)
                 elif seg_start < cutoff:
-                    with _open_seg(path) as f:
-                        lines = [ln.rstrip("\n") for ln in f if ln.strip()]
-                    keep: list[str] = []
-                    for i, ln in enumerate(lines):
-                        rec = json.loads(ln)
-                        off = rec.get("o", seg_start + i)
-                        if off >= cutoff:
-                            keep.append(ln)
+                    lines = list(_scan_segment(path, seg_start))
+                    keep = [ln for off, _rec, ln in lines if off >= cutoff]
                     # the trimmed replacement lands in the TIER the source
                     # lived in (a remote spanning segment trims in place)
                     seg_dir = os.path.dirname(path)
                     tmp = os.path.join(seg_dir, f".tmp-{uuid.uuid4().hex}")
                     with open(tmp, "w", encoding="utf-8") as f:
                         # a gapped compacted segment can have every survivor
-                        # below the cutoff; a lone "\n" would poison
-                        # _read_range's json.loads (compact() guards the
-                        # same case)
+                        # below the cutoff; write an empty file rather than a
+                        # lone "\n" (compact() guards the same case)
                         f.write("\n".join(keep) + "\n" if keep else "")
                     # segment names carry the LOGICAL span (compacted
                     # segments are gapped: span >= line count), so end
@@ -3145,53 +3143,50 @@ class TopicLog:
             retained: list[tuple] = []  # the unstable tail, verbatim
             unstable = False
             for seg_start, _count, path in segs:
-                with _open_seg(path) as f:
-                    for i, line in enumerate(f):
-                        rec = json.loads(line)
-                        off = rec.get("o", seg_start + i)
-                        x = rec.get("x")
-                        if not unstable and x is not None and x in open_ids:
-                            unstable = True  # first unstable offset found
-                        if unstable:
-                            # above the LSO: nothing is cleaned — keep the
-                            # record (marker or data, any txn state) as-is
-                            prod = (
-                                (rec["pi"], rec["pe"], rec["sq"], rec["bs"])
-                                if "pi" in rec else None
-                            )
-                            retained.append((
-                                off, rec["ts"], _rec_key(rec), _rec_val(rec),
-                                rec.get("h"), x, prod, rec.get("dh"),
-                                rec.get("ctl"),
-                            ))
-                            continue
-                        if "ctl" in rec:
-                            # txn markers: the cleaner removes resolved
-                            # control records (their offsets stay gapped,
-                            # like a broker past delete.retention.ms)
-                            continue
-                        if x is not None and x in aborted_ids:
-                            aborted += 1  # the cleaner removes aborted
-                            continue      # records outright
-                        kb = _rec_key(rec)
-                        if kb is None:
-                            raise UnkeyedTopicError(
-                                "compact() requires every record keyed "
-                                f"(keyless record at {topic}/p{pid} offset {off})"
-                            )
-                        n_records += 1
-                        # carry headers through in wire form: the key's
-                        # latest record keeps ITS headers, like a broker;
-                        # committed txn tags survive, and so does the
-                        # idempotent-producer metadata, keeping sequence
-                        # state log-recoverable post-cleaning
+                for off, rec, _ln in _scan_segment(path, seg_start):
+                    x = rec.get("x")
+                    if not unstable and x is not None and x in open_ids:
+                        unstable = True  # first unstable offset found
+                    if unstable:
+                        # above the LSO: nothing is cleaned — keep the
+                        # record (marker or data, any txn state) as-is
                         prod = (
                             (rec["pi"], rec["pe"], rec["sq"], rec["bs"])
                             if "pi" in rec else None
                         )
-                        latest[kb] = (off, rec["ts"], _rec_val(rec),
-                                      rec.get("h"), rec.get("x"), prod,
-                                      rec.get("dh"))
+                        retained.append((
+                            off, rec["ts"], _rec_key(rec), _rec_val(rec),
+                            rec.get("h"), x, prod, rec.get("dh"),
+                            rec.get("ctl"),
+                        ))
+                        continue
+                    if "ctl" in rec:
+                        # txn markers: the cleaner removes resolved
+                        # control records (their offsets stay gapped,
+                        # like a broker past delete.retention.ms)
+                        continue
+                    if x is not None and x in aborted_ids:
+                        aborted += 1  # the cleaner removes aborted
+                        continue      # records outright
+                    kb = _rec_key(rec)
+                    if kb is None:
+                        raise UnkeyedTopicError(
+                            "compact() requires every record keyed "
+                            f"(keyless record at {topic}/p{pid} offset {off})"
+                        )
+                    n_records += 1
+                    # carry headers through in wire form: the key's
+                    # latest record keeps ITS headers, like a broker;
+                    # committed txn tags survive, and so does the
+                    # idempotent-producer metadata, keeping sequence
+                    # state log-recoverable post-cleaning
+                    prod = (
+                        (rec["pi"], rec["pe"], rec["sq"], rec["bs"])
+                        if "pi" in rec else None
+                    )
+                    latest[kb] = (off, rec["ts"], _rec_val(rec),
+                                  rec.get("h"), rec.get("x"), prod,
+                                  rec.get("dh"))
             survivors = []
             for kb, (off, ts, vb, h, x, pr, dh) in latest.items():
                 if vb is not None:
@@ -3267,23 +3262,16 @@ def _route(key: bytes | None, value: bytes, n: int) -> int:
 def _read_best(partition: "_Part"):
     """Arrow-batched read of one scan partition. A ``None`` partition is
     the engine's empty-scan probe (partitions() returned []) — yield
-    nothing. A headers read takes the row path: the envelope's
-    list<struct<string,binary>> column with per-record null/ordering
-    semantics has no zero-copy JSONL parse, and headers topics opt in
-    explicitly (Kafka's includeHeaders default is false for the same
-    reason — the column costs)."""
+    nothing. A headers read takes the same path: _read_range_arrow adds
+    the ``headers`` column (Kafka's includeHeaders default is false
+    because the column costs a per-row base64 decode)."""
     if partition is None:
         return iter(())
-    excl = getattr(partition, "excluded", None)
-    if getattr(partition, "headers", False):
-        return _read_range(
-            partition.root, partition.topic, partition.pid,
-            partition.start, partition.end, include_headers=True,
-            excluded_txns=excl,
-        )
     return _read_range_arrow(
         partition.root, partition.topic, partition.pid,
-        partition.start, partition.end, excluded_txns=excl,
+        partition.start, partition.end,
+        excluded_txns=getattr(partition, "excluded", None),
+        include_headers=getattr(partition, "headers", False),
     )
 
 
@@ -3394,7 +3382,61 @@ def _parse_isolation(options: dict) -> str:
     return iso
 
 
-class _TopicLogBatchReader(DataSourceReader):
+def _parse_offsets(raw: str | None, what: str, lowest: int) -> dict[str, int] | None:
+    """The Kafka source's per-partition offsets JSON form
+    ``{"topic": {"0": 23, "1": -2}}`` (-2 = earliest, -1 = latest) as a
+    flat {"topic/pid": offset} dict; None for the "earliest"/"latest"
+    string forms. A value below ``lowest`` (the smallest sentinel ``what``
+    accepts) raises: read as a literal start it would silently read the
+    whole partition."""
+    if raw is None or not raw.strip().startswith("{"):
+        return None
+    out = {
+        f"{t}/{pid}": int(off)
+        for t, parts in json.loads(raw).items()
+        for pid, off in parts.items()
+    }
+    for k, off in out.items():
+        if off < lowest:
+            valid = "-2 (earliest), -1 (latest)" if lowest == -2 else "-1 (latest)"
+            raise ValueError(
+                f"{what} for {k}: {off} — only {valid} or an absolute offset "
+                "is valid (Kafka source contract)"
+            )
+    return out
+
+
+class _TopicLogSource:
+    """Option parsing shared by the batch and stream readers, each option
+    parsed once: the subscription (root/topics/assign) and its READ ACL
+    check, ``minPartitions``, ``isolation`` and the per-partition
+    ``startingOffsets`` JSON form. ``includeHeaders`` is read off the
+    ``schema`` Spark hands the reader (TopicLogDataSource.schema is the one
+    place that parses the option)."""
+
+    def __init__(self, options: dict, schema: StructType):
+        self.root, self.topics, self.assigned = _resolve_topics(options)
+        _authorize_ds(options, "READ", self.topics)
+        self.headers = "headers" in schema.fieldNames()
+        self.min_partitions = (
+            int(options["minpartitions"]) if "minpartitions" in options else None
+        )
+        self.isolation = _parse_isolation(options)
+        self.start_off = _parse_offsets(options.get("startingoffsets"),
+                                        "startingOffsets", -2)
+
+    def _pids(self, topic: str) -> list[int]:
+        return (self.assigned.get(topic, []) if self.assigned is not None
+                else _list_partitions(self.root, topic))
+
+    def _start(self, key: str, end: int) -> int:
+        """Start offset of partition ``key`` under the JSON form: -2 (or
+        absent) = earliest, -1 = latest, else clamped to the log end."""
+        raw = self.start_off.get(key, -2)
+        return 0 if raw == -2 else end if raw == -1 else min(raw, end)
+
+
+class _TopicLogBatchReader(_TopicLogSource, DataSourceReader):
     """Bounded batch scan with the Kafka batch source's option surface:
     ``startingOffsets``/``endingOffsets`` ("earliest"/"latest" or the
     per-partition JSON form with -2 = earliest, -1 = latest) and
@@ -3406,50 +3448,18 @@ class _TopicLogBatchReader(DataSourceReader):
     nothing (startingOffsetsByTimestampStrategy=latest); an end timestamp
     with no qualifying record → reads to the log end."""
 
-    def __init__(self, options: dict):
-        self.root, self.topics, self.assigned = _resolve_topics(options)
-        _authorize_ds(options, "READ", self.topics)
-        self.headers = str(options.get("includeheaders", "false")).lower() == "true"
+    def __init__(self, options: dict, schema: StructType):
+        super().__init__(options, schema)
         raw_start = options.get("startingoffsets")
-        if raw_start is not None and not raw_start.strip().startswith("{") \
-                and raw_start.strip().lower() == "latest":
+        if raw_start is not None and raw_start.strip().lower() == "latest":
             # the Kafka batch source rejects startingOffsets=latest (an
             # empty scan by definition); silently reading the full range
             # instead would be worse than the error
             raise ValueError("batch read does not accept startingOffsets=latest")
-        self.start_off = self._parse_offsets(raw_start)
-        self.end_off = self._parse_offsets(options.get("endingoffsets"))
-        for k, off in (self.end_off or {}).items():
-            if off < -1:
-                raise ValueError(
-                    f"endingOffsets for {k}: {off} — only -1 (latest) or an "
-                    "absolute offset is valid (Kafka batch-source contract)"
-                )
-        for k, off in (self.start_off or {}).items():
-            if off < -2:
-                raise ValueError(
-                    f"startingOffsets for {k}: {off} — only -2 (earliest), -1 "
-                    "(latest) or an absolute offset is valid (Kafka batch-source "
-                    "contract; a raw negative would silently read the whole "
-                    "partition)"
-                )
+        self.end_off = _parse_offsets(options.get("endingoffsets"),
+                                      "endingOffsets", -1)
         self.start_ts = options.get("startingtimestamp")
         self.end_ts = options.get("endingtimestamp")
-        self.min_partitions = (
-            int(options["minpartitions"]) if "minpartitions" in options else None
-        )
-        self.isolation = _parse_isolation(options)
-
-    @staticmethod
-    def _parse_offsets(raw: str | None) -> dict[str, int] | None:
-        if raw is None or not raw.strip().startswith("{"):
-            return None  # "earliest"/"latest" string forms = full range
-        parsed = json.loads(raw)
-        return {
-            f"{t}/{pid}": int(off)
-            for t, parts in parsed.items()
-            for pid, off in parts.items()
-        }
 
     def partitions(self) -> Sequence[InputPartition]:
         out = []
@@ -3465,17 +3475,14 @@ class _TopicLogBatchReader(DataSourceReader):
                 log.offsets_for_times(t, int(self.end_ts))
                 if self.end_ts is not None else None
             )
-            pids = (self.assigned.get(t, []) if self.assigned is not None
-                    else _list_partitions(self.root, t))
-            for pid in pids:
+            for pid in self._pids(t):
                 end = _end_offset(_part_dir(self.root, t, pid))
                 s, e = 0, end
                 if starts_by_time is not None:
                     got = starts_by_time.get(pid)
                     s = end if got is None else got  # no match -> read nothing
                 elif self.start_off is not None:
-                    raw = self.start_off.get(f"{t}/{pid}", -2)
-                    s = 0 if raw == -2 else end if raw == -1 else min(raw, end)
+                    s = self._start(f"{t}/{pid}", end)
                 if ends_by_time is not None:
                     got = ends_by_time.get(pid)
                     e = end if got is None else got  # no match -> to the end
@@ -3492,37 +3499,19 @@ class _TopicLogBatchReader(DataSourceReader):
         return _read_best(partition)
 
 
-class _TopicLogStreamReader(DataSourceStreamReader):
+class _TopicLogStreamReader(_TopicLogSource, DataSourceStreamReader):
     """Per-(topic,partition) offset tracking. Offsets are a flat JSON dict
     {"topic/pid": next_offset}. ``batchSize`` caps offsets consumed per
     partition per trigger (maxOffsetsPerTrigger analog — the reference's
     16-message pull loop, src/Consumer.coffee:57)."""
 
-    def __init__(self, options: dict):
-        self.root, self.topics, self.assigned = _resolve_topics(options)
-        _authorize_ds(options, "READ", self.topics)
+    def __init__(self, options: dict, schema: StructType):
+        super().__init__(options, schema)
         self.pattern = options.get("subscribepattern")
-        raw_start = options.get("startingoffsets", "latest")
-        # Kafka-source parity (S4): startingOffsets accepts the JSON form
-        # {"topic": {"0": 23, "1": -2}} with -2 = earliest and -1 = latest
-        # per partition, alongside the "earliest"/"latest" strings.
-        self.explicit_start: dict[str, int] | None = None
-        if raw_start.strip().startswith("{"):
-            parsed = json.loads(raw_start)
-            self.explicit_start = {
-                f"{t}/{pid}": int(off)
-                for t, parts in parsed.items()
-                for pid, off in parts.items()
-            }
-            self.from_latest = False
-        else:
-            self.from_latest = raw_start.lower() == "latest"
+        # startingOffsets: "earliest", "latest" (the default) or the
+        # per-partition JSON form (start_off, Kafka-source parity S4)
+        self.from_latest = options.get("startingoffsets", "latest").lower() == "latest"
         self.cap = int(options["batchsize"]) if "batchsize" in options else None
-        self.headers = str(options.get("includeheaders", "false")).lower() == "true"
-        self.min_partitions = (
-            int(options["minpartitions"]) if "minpartitions" in options else None
-        )
-        self.isolation = _parse_isolation(options)
         # Kafka source minOffsetsPerTrigger/maxTriggerDelay: hold the
         # trigger until >= N new offsets are available, but never longer
         # than the delay (Kafka's default 15m) — small-batch suppression
@@ -3547,8 +3536,7 @@ class _TopicLogStreamReader(DataSourceStreamReader):
         ends = {
             f"{t}/{pid}": _end_offset(_part_dir(self.root, t, pid))
             for t in self._current_topics()
-            for pid in (self.assigned.get(t, []) if self.assigned is not None
-                        else _list_partitions(self.root, t))
+            for pid in self._pids(t)
         }
         if self.isolation == "read_committed":
             # LSO gate: never PLAN past an open transaction's first record
@@ -3567,20 +3555,8 @@ class _TopicLogStreamReader(DataSourceStreamReader):
 
     def _start_offsets(self) -> dict[str, int]:
         ends = self._ends()
-        if self.explicit_start is not None:
-            out = {}
-            for k, end in ends.items():
-                off = self.explicit_start.get(k, -2)
-                if off == -2:
-                    out[k] = 0
-                elif off == -1:
-                    out[k] = end
-                else:
-                    # clamp to the valid range (Kafka raises on OOR by
-                    # default; the analog here is the failOnDataLoss=false
-                    # posture — start at the nearest valid offset)
-                    out[k] = max(0, min(off, end))
-            return out
+        if self.start_off is not None:
+            return {k: self._start(k, end) for k, end in ends.items()}
         return ends if self.from_latest else {k: 0 for k in ends}
 
     def initialOffset(self) -> dict:
@@ -4021,24 +3997,24 @@ class TopicLogDataSource(DataSource):
         return FORMAT_NAME
 
     def schema(self) -> str:
-        opts = {k.lower(): v for k, v in self.options.items()}
-        if str(opts.get("includeheaders", "false")).lower() == "true":
+        if str(self._options().get("includeheaders", "false")).lower() == "true":
             return f"{ENVELOPE_DDL}, {HEADERS_DDL}"
         return ENVELOPE_DDL
 
+    def _options(self) -> dict:
+        return {k.lower(): v for k, v in self.options.items()}
+
     def reader(self, schema: StructType) -> DataSourceReader:
-        return _TopicLogBatchReader({k.lower(): v for k, v in self.options.items()})
+        return _TopicLogBatchReader(self._options(), schema)
 
     def streamReader(self, schema: StructType) -> DataSourceStreamReader:
-        return _TopicLogStreamReader({k.lower(): v for k, v in self.options.items()})
+        return _TopicLogStreamReader(self._options(), schema)
 
     def writer(self, schema: StructType, overwrite: bool) -> DataSourceWriter:
-        return _TopicLogArrowWriter(
-            {k.lower(): v for k, v in self.options.items()}, schema)
+        return _TopicLogArrowWriter(self._options(), schema)
 
     def streamWriter(self, schema: StructType, overwrite: bool) -> DataSourceStreamWriter:
-        return _TopicLogStreamArrowWriter(
-            {k.lower(): v for k, v in self.options.items()}, schema)
+        return _TopicLogStreamArrowWriter(self._options(), schema)
 
 
 _REGISTERED: set[str] = set()

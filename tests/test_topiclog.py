@@ -1266,6 +1266,73 @@ def test_headers_survive_compaction(tmp_path):
     assert got[b"k2"][1] == [("gen", b"x")]
 
 
+def test_headers_read_parity(spark, tmp_path):
+    """An includeHeaders batch read returns exactly the envelopes built from
+    the inputs, through every segment shape: UTF-8 and base64 keys/values,
+    duplicate header keys, a null and a ``str`` header value, a record with
+    no headers, a compacted (``"o"``-gapped) segment, a gzip segment and an
+    aborted transaction under read_committed. The row view (_read_range)
+    agrees."""
+    from rdkafka_streams_spark.streaming.topiclog import _read_range
+
+    root = str(tmp_path)
+    log = TopicLog(root)
+    log.create_topic("t", partitions=1)
+    # offsets 0-3, compacted below: k1@0 is superseded by k1@2
+    log.append("t", [b"old", b"\xff\x00bin", b"new", b"plain"],
+               keys=[b"k1", b"\x80k2", b"k1", b"k3"], partition=0,
+               timestamps=[1000, 1001, 1002, 1003],
+               headers=[[("gen", b"1")],
+                        [("dup", b"a"), ("dup", b"\xfe"), ("nul", None)],
+                        [("gen", "two")], None])
+    log.compact("t")
+    # offsets 4-5: one gzip segment
+    log.append("t", [b"gz0", b"gz1"], keys=[b"g0", b"g1"], partition=0,
+               timestamps=[2000, 2001], compression="gzip",
+               headers=[[("enc", b"gzip"), ("enc", None)], []])
+    # offset 6 aborted, 7 its marker; offset 8 plain
+    log.begin_txn("bad")
+    log.append("t", [b"evil"], keys=[b"k9"], partition=0, timestamps=[3000],
+               headers=[[("x", b"y")]], txn="bad")
+    log.abort_txn("bad")
+    log.append("t", [b"last"], keys=[b"k4"], partition=0, timestamps=[4000])
+
+    expected = [
+        (b"\x80k2", b"\xff\x00bin", "t", 0, 1, 1001, 0,
+         [("dup", b"a"), ("dup", b"\xfe"), ("nul", None)]),
+        (b"k1", b"new", "t", 0, 2, 1002, 0, [("gen", b"two")]),
+        (b"k3", b"plain", "t", 0, 3, 1003, 0, None),
+        (b"g0", b"gz0", "t", 0, 4, 2000, 0, [("enc", b"gzip"), ("enc", None)]),
+        (b"g1", b"gz1", "t", 0, 5, 2001, 0, None),  # [] rides as no headers
+        (b"k4", b"last", "t", 0, 8, 4000, 0, None),
+    ]
+
+    def hdrs(hs):
+        return None if hs is None else [
+            (h["key"], None if h["value"] is None else bytes(h["value"]))
+            for h in hs
+        ]
+
+    got = read_topic(spark, root, "t", include_headers=True,
+                     isolation="read_committed").selectExpr(
+        "key", "value", "topic", "partition", "offset",
+        "unix_millis(timestamp) ts", "timestampType", "headers",
+    ).collect()
+    assert sorted(
+        (bytes(r.key), bytes(r.value), r.topic, r.partition, r.offset, r.ts,
+         r.timestampType, hdrs(r.headers))
+        for r in got
+    ) == sorted(expected)
+
+    rows = _read_range(root, "t", 0, 0, log.end_offsets("t")[0],
+                       include_headers=True,
+                       excluded_txns=log.unresolved_txn_ids())
+    assert [
+        (k, v, t, p, o, round(ts.timestamp() * 1000), tt, h)
+        for k, v, t, p, o, ts, tt, h in rows
+    ] == expected
+
+
 def test_producer_headers_col_streaming_consume(spark, tmp_path):
     """KProducer.headers_col -> sink headers column -> streaming consumer
     with include_headers: the envelope column arrives through the stream
@@ -1478,6 +1545,32 @@ def test_batch_read_invalid_offset_options_raise(spark, tmp_path):
     # the Kafka batch source rejects it
     with pytest.raises(Exception, match="startingOffsets"):
         read_topic(spark, root, "t", startingOffsets='{"t": {"0": -5}}').collect()
+
+
+def test_stream_reader_rejects_invalid_starting_offsets(root):
+    """The stream reader rejects a per-partition startingOffsets below -2
+    like the batch reader does, instead of clamping it to 0 and silently
+    replaying the whole partition. Direct reader calls, no query."""
+    from pyspark.sql.types import BinaryType, StructField, StructType
+
+    from rdkafka_streams_spark.streaming.topiclog import TopicLogDataSource
+
+    log = TopicLog(root)
+    log.create_topic("t", partitions=1)
+    log.append("t", [b"a", b"b"], partition=0)
+    # the envelope without a headers field (fromDDL would need a session)
+    schema = StructType([StructField("key", BinaryType()),
+                         StructField("value", BinaryType())])
+
+    def initial(start):
+        ds = TopicLogDataSource({"path": root, "subscribe": "t",
+                                 "startingOffsets": start})
+        return ds.streamReader(schema).initialOffset()
+
+    assert initial('{"t": {"0": 1}}') == {"t/0": 1}
+    assert initial('{"t": {"0": -1}}') == {"t/0": 2}
+    with pytest.raises(ValueError, match="startingOffsets"):
+        initial('{"t": {"0": -5}}')
 
 
 def test_delete_records_before_timestamp(spark, tmp_path):
@@ -1839,7 +1932,7 @@ def test_txn_isolation_batch_arrow_path(spark, tmp_path):
 
 
 def test_txn_isolation_row_path_and_compaction(spark, tmp_path):
-    """The per-row (headers) read path applies the same txn filter, and
+    """A headers read applies the same txn filter as a plain read, and
     compaction resolves transactions like the broker's cleaner: aborted
     records and resolved control markers are removed outright."""
     from rdkafka_streams_spark.streaming.topiclog import TopicLog, read_topic
@@ -1856,7 +1949,7 @@ def test_txn_isolation_row_path_and_compaction(spark, tmp_path):
             (r.offset, r.v)
             for r in read_topic(
                 spark, str(tmp_path), "t",
-                include_headers=True,  # forces the tuple read path
+                include_headers=True,  # a headers read, same txn filter
                 isolation="read_committed",
             ).selectExpr("offset", "cast(value as string) v").collect()
         }
